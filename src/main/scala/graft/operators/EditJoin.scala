@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** L70: edit-distance similarity join — all document pairs whose
@@ -70,6 +70,12 @@ object EditJoin {
   /** The distinct candidate pair set BEFORE the levenshtein verify — the
     * probe surface: candidate growth is the quantity the scale claim
     * rides on (ScaleProbe measures it at 1× vs 10×). */
+  /** The integers lo..hi ascending, and NO rows when lo > hi: Spark's
+    * `sequence(lo, hi)` would count DOWN there, so a window a future bound
+    * tweak inverts stays empty instead of emitting spurious offsets. */
+  private[graft] def probeOffsets(lo: Column, hi: Column): Column =
+    when(lo <= hi, sequence(lo, hi))
+
   private[graft] def candidatePairs(norm: DataFrame, t: Int): DataFrame = {
     require(t >= 1, s"threshold must be >= 1, got $t")
     val m = t + 1
@@ -107,7 +113,7 @@ object EditJoin {
         // bound ∩ |o| <= i−1 ∩ |Δ−o| <= m−i. Never empty: the lower
         // bound's only positive term Δ−(m−i) stays <= every upper term
         // (their gap is t−Δ >= 0), and 0 always qualifies when Δ = 0.
-        explode(sequence(
+        explode(probeOffsets(
           greatest(expr(s"-(($t - delta) div 2)"),
             lit(1) - col("i"), col("delta") - (lit(m) - col("i"))),
           least(expr(s"delta + (($t - delta) div 2)"),

@@ -45,10 +45,12 @@ object Incremental {
   def appendNew(existing: DataFrame, incoming: DataFrame, dedupKeys: Seq[String]): DataFrame =
     existing.unionByName(newRows(existing, incoming, dedupKeys))
 
-  /** The rows an idempotent append would write (anti-join on the dedup key). */
+  /** The rows an idempotent append would write (anti-join on the dedup key).
+    * No `distinct` on the existing side: a left-anti join keeps the same
+    * rows whether or not that side repeats a key, and the dedup costs a
+    * shuffle stage. */
   def newRows(existing: DataFrame, incoming: DataFrame, dedupKeys: Seq[String]): DataFrame =
-    incoming.join(existing.select(dedupKeys.map(col): _*).distinct(),
-      dedupKeys, "left_anti")
+    incoming.join(existing.select(dedupKeys.map(col): _*), dedupKeys, "left_anti")
 
   /** E2: full incremental indicator update — watermark, boundary lookback,
     * recompute the tail of each series, idempotent append. Keys with no

@@ -1,8 +1,12 @@
 package graft.serving
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Observation, SparkSession}
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Timeframe
 import graft.operators.{Incremental, Indicators, Ohlc, Ticks}
@@ -18,7 +22,7 @@ import graft.sources.Compact
   * way the reference's per-poll Prefect run advances its tables — made
   * continuous:
   *
-  *  1. E3 serving: [[TickerServer.publishBatch]] fans the batch's latest
+  *  1. E3 serving: [[TickerServer.publishLatest]] fans the batch's latest
   *     tick per pair out to subscribers (edge-sized collect);
   *  2. S2+T4 relay: per-batch second-dedup, anti-join append into the
   *     tick store (idempotent under batch replay);
@@ -51,11 +55,17 @@ import graft.sources.Compact
   *  - every store is written `partitionBy(pair, dt)` (dt = the tick's
   *    UTC date), so every bounded read below prunes PARTITIONS by pair
   *    and date and parquet ROW GROUPS by time statistics;
-  *  - the per-(pair, timeframe) candle watermarks are carried in the
-  *    grid snapshot (O(pairs × timeframes) rows) and collected ONCE per
-  *    batch; every threshold below is a LITERAL predicate built from
-  *    them — nothing arrives at a scan through a join, so pushdown is
-  *    structural, not optimizer luck;
+  *  - every store and snapshot is read with the schema declared in
+  *    [[Stores]] (no footer-inference job per read), and an absent store
+  *    is an HDFS `exists` answer, not a caught read error;
+  *  - the per-(pair, timeframe) candle watermarks and fold state (the
+  *    grid snapshot) and the two ledger states — O(pairs × timeframes)
+  *    rows each — live in a per-query [[LiveState]] on the driver. A held
+  *    copy is trusted only while its version equals the newest
+  *    `_SUCCESS` version on disk (a directory listing, no job); otherwise
+  *    it is reloaded from the snapshot. Every threshold below is a
+  *    LITERAL predicate built from those rows — nothing arrives at a scan
+  *    through a join, so pushdown is structural, not optimizer luck;
   *  - tick-dedup anti-join: first-write-wins collisions can only occur
   *    at matching (pair, second), so the existing side is bounded by the
   *    batch's literal [min, max] second range — lossless;
@@ -64,11 +74,22 @@ import graft.sources.Compact
   *  - candle/fact anti-joins: existing sides bounded by per-pair literal
   *    time floors no incoming row can undercut (anti-join semantics are
   *    unchanged wherever collisions are possible);
-  *  - the only driver materializations are the edge-sized publish, the
-  *    watermark rows, and the batch min/max — all O(pairs × timeframes)
-  *    or O(1);
-  *  - the out-of-order probe rides the tick append's OWN action as an
-  *    `observe` metric (no extra job per batch);
+  *  - the driver materializations are the edge-sized publish collect
+  *    (which also yields the batch's emptiness, its [min, max] second
+  *    range and each pair's max tick time — the bar-closing bound), the
+  *    advanced snapshot rows after each fold (they become the next
+  *    batch's held state), and a snapshot reload when the held copy is
+  *    stale — all O(pairs × timeframes);
+  *  - no job answers a question the driver already knows: the
+  *    out-of-order probe rides the tick append's OWN action, and the
+  *    fold and anti-join emptiness checks ride their frame's checkpoint,
+  *    as `observe` metrics; a frame is checkpointed only when two actions
+  *    consume it; the per-timeframe durations, the bar-closing bound and
+  *    the ledger frontiers are literal maps, not broadcast joins;
+  *  - job budget: a steady-state batch with every phase armed fires a
+  *    fixed number of Spark jobs independent of data volume (query-stage
+  *    jobs per shuffle and broadcast, one per checkpoint/collect/write) —
+  *    LivePipelineSpec pins it, so a plan-shape change fails tier-1;
   *  - store fragmentation is bounded by [[Compact.compactStore]] every
   *    `compactEvery` batches — a crash-safe partition-granular
   *    rewrite-and-swap (work ∝ fragmented partitions, not store size),
@@ -89,6 +110,46 @@ object LivePipeline {
     val tradeStopState = s"$root/trade_stop_state"
     val checkpoint = s"$root/ckpt"
   }
+
+  /** The schema every store and snapshot is written with, declared once
+    * so reads skip footer inference. Stores list their data columns, then
+    * the `pair`/`dt` partition columns — the order a reader infers. */
+  object Stores {
+    private def ddl(s: String): StructType = StructType.fromDDL(s)
+    private val part = "t_s BIGINT, pair STRING, dt DATE"
+    val TickSchema: StructType = ddl(s"time TIMESTAMP, bid DOUBLE, ask DOUBLE, $part")
+    val CandleSchema: StructType = ddl("timeframe STRING, time TIMESTAMP, open DOUBLE, " +
+      s"high DOUBLE, low DOUBLE, close DOUBLE, $part")
+    val FactSchema: StructType = ddl("indicator STRING, timeframe STRING, time TIMESTAMP, " +
+      s"period INT, calc_version STRING, value DOUBLE, $part")
+    val SignalSchema: StructType = ddl("event_datetime TIMESTAMP, event_type STRING, " +
+      "price DOUBLE, quantity INT, trigger_indicator_name STRING, " +
+      "trigger_indicator_value DOUBLE, trigger_indicator_timeframe STRING, " +
+      s"trigger_indicator_period INT, $part")
+    val TradeSchema: StructType = ddl("timeframe STRING, trade_no BIGINT, " +
+      "entry_time TIMESTAMP, entry_price DOUBLE, exit_time TIMESTAMP, " +
+      s"exit_price DOUBLE, pnl DOUBLE, $part")
+    val StoppedTradeSchema: StructType = ddl("timeframe STRING, trade_no BIGINT, " +
+      "entry_time TIMESTAMP, entry_price DOUBLE, exit_time TIMESTAMP, " +
+      s"exit_price DOUBLE, reason STRING, pnl DOUBLE, $part")
+    /** A grid snapshot row: one indicator cell's machine state + its key's
+      * candle watermark. */
+    val GridStateSchema: StructType = ddl("pair STRING, timeframe STRING, " +
+      "indicator STRING, period INT, n BIGINT, vec ARRAY<DOUBLE>, wm TIMESTAMP")
+    /** A ledger snapshot row (both trade ledgers). */
+    val LedgerSchema: StructType = ddl("pair STRING, timeframe STRING, open BOOLEAN, " +
+      "entry_time TIMESTAMP, entry_price DOUBLE, n_closed BIGINT, last_time TIMESTAMP")
+  }
+
+  /** The driver-held snapshots of one running query: per snapshot root,
+    * the version held and its rows. [[start]] creates one per query and
+    * hands it to every batch; [[processBatch]] trusts an entry only while
+    * its version is the newest complete one on disk. */
+  final class LiveState {
+    private[LivePipeline] val held = mutable.Map.empty[String, (Long, Array[Row])]
+  }
+
+  import Stores._
 
   /** Start the chain against a live endpoint. `maxMessages`/
     * `maxMessagesPerBatch` bound an AvailableNow drain into a
@@ -120,6 +181,7 @@ object LivePipeline {
       .option("maxReconnects", maxReconnects.toString)
       .option("availableNowTimeoutMs", availableNowTimeoutMs.toString)
       .load()
+    val state = new LiveState
     Ticks.valid(Ticks.fromWireJson(lines))
       .writeStream
       .option("checkpointLocation", stores.checkpoint)
@@ -127,7 +189,7 @@ object LivePipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, stores, server, indicators, periods, tfs,
-          compactEvery, retainDays = retainDays)
+          compactEvery, retainDays = retainDays, state = state)
       }
       .start()
   }
@@ -178,10 +240,10 @@ object LivePipeline {
     *
     * Per-batch scan cost = the widest closed pair's unfrozen window +
     * the open-pair residue — never store history. */
-  private def readStoreBounded(spark: SparkSession, path: String,
+  private def readStoreBounded(spark: SparkSession, path: String, schema: StructType,
                                bounds: Seq[PairBound], strict: Boolean)
       : Option[DataFrame] = {
-    probeStore(spark, path).map { raw =>
+    scanStore(spark, path, schema).map { raw =>
       if (bounds.isEmpty) return Some(raw.drop("dt", "t_s"))
       val exact = exactPred(bounds, strict)
       val closed = bounds.filter(_.exempt.isEmpty)
@@ -202,14 +264,49 @@ object LivePipeline {
     }
   }
 
+  /** `value` looked up per row by `keys` in a driver-side nested map — the
+    * literal form of a broadcast join against O(pairs × timeframes) rows
+    * (no broadcast job); a missing key reads NULL. */
+  private def lookup[V: scala.reflect.runtime.universe.TypeTag](
+      m: Map[String, Map[String, V]], outer: Column, inner: Column): Column =
+    element_at(element_at(typedlit(m), outer), inner)
+
+  /** Eager local checkpoint that also reports how many rows it holds: the
+    * count rides the checkpoint's own job as an observed metric, so no
+    * separate emptiness probe runs. */
+  private def checkpointCounting(df: DataFrame, name: String): (DataFrame, Long) = {
+    val obs = new Observation(name)
+    val cp = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    (cp, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** A fold's tagged output checkpointed (`is_state` rows = the advanced
+    * O(keys) state). The checkpoint's own job also observes the number of
+    * non-state rows and the state rows themselves, in `schema` order, so
+    * neither the emptiness check nor the held copy of the state costs a
+    * job. */
+  private def checkpointFold(df: DataFrame, name: String, schema: StructType)
+      : (DataFrame, Long, Array[Row]) = {
+    val obs = new Observation(name)
+    val cp = df.observe(obs,
+        count(when(!col("is_state"), 1)).as("n"),
+        collect_list(when(col("is_state"),
+          struct(schema.fieldNames.map(col).toSeq: _*))).as("state"))
+      .localCheckpoint()
+    val m = obs.get
+    (cp, m("n").asInstanceOf[Long], m("state").asInstanceOf[Seq[Row]].toArray)
+  }
+
   /** One poll of the reference's deployment loop (also driven directly by
-    * the spec's kill/restart harness). */
+    * the spec's kill/restart harness). `state` holds the snapshots across
+    * the batches of one query; a fresh one reloads them from disk. */
   def processBatch(batch: DataFrame, batchId: Long, stores: Stores,
                    server: TickerServer, indicators: Seq[String],
                    periods: Seq[Int], tfs: Seq[Timeframe],
                    compactEvery: Int = 16,
                    slPct: Double = 0.005, tpPct: Double = 0.01,
-                   retainDays: Int = 0): Unit = {
+                   retainDays: Int = 0,
+                   state: LiveState = new LiveState): Unit = {
     val spark = batch.sparkSession
     // phase labels (guide §1.5): every Spark job this batch fires carries
     // the phase that submitted it, so a listener (E2eProbe / the UI) can
@@ -233,31 +330,36 @@ object LivePipeline {
     phase("ingest-checkpoint")
     val ticks = batch.withColumn("seq", monotonically_increasing_id())
       .localCheckpoint()
-    if (ticks.isEmpty) return
 
     // 1) E3 serving edge: latest tick per pair fans out NOW — the edge
-    //    never waits for storage
+    //    never waits for storage. The same edge-sized collect answers the
+    //    batch's emptiness, its second range and each pair's max tick time
     phase("publish")
-    server.publishBatch(ticks, batchId)
+    val edge = TickerServer.latestPerPair(ticks, min(col("time")).as("lo")).collect()
+    if (edge.isEmpty) return
+    server.publishLatest(edge.toSeq)
+    // second-truncated like the deduped ticks (and the stores)
+    def sec(t: java.sql.Timestamp): Long = Math.floorDiv(t.getTime, 1000L)
+    val loSec = edge.map(r => sec(r.getTimestamp(4))).min
+    val hiSec = edge.map(r => sec(r.getTimestamp(1))).max
+    val maxSecByPair: Map[String, Long] =
+      edge.map(r => r.getString(0) -> sec(r.getTimestamp(1))).toMap
 
     val allTfs = (Timeframe.Base +: tfs.filterNot(_.code == Timeframe.Base.code)).distinct
     val durByTf = allTfs.map(t => t.code -> t.durationSeconds.toLong).toMap
 
-    // per-(pair, timeframe) candle watermarks, collected ONCE: normally
-    // the O(pairs × timeframes) rows the grid snapshot already carries;
-    // after a crash between candle append and snapshot advance they are
-    // merely STALE-LOW (never high), which only widens the recomputed
-    // tail — the anti-joins dedup the overlap, so correctness is
-    // unaffected. Aggregating the candle store is the no-snapshot
+    // per-(pair, timeframe) candle watermarks, from the held grid
+    // snapshot: after a crash between candle append and snapshot advance
+    // they are merely STALE-LOW (never high), which only widens the
+    // recomputed tail — the anti-joins dedup the overlap, so correctness
+    // is unaffected. Aggregating the candle store is the no-snapshot
     // fallback (first batches / crash before the first snapshot).
     phase("watermarks")
-    val snapOpt = readLatestSnapshot(spark, stores.gridState)
-    val wmRows: Seq[(String, String, java.sql.Timestamp)] = snapOpt match {
-      case Some(snap) =>
-        snap.select(col("pair"), col("timeframe"), col("wm")).distinct()
-          .collect().toSeq
-          .map(r => (r.getString(0), r.getString(1), r.getTimestamp(2)))
-      case None => readStore(spark, stores.candles, None) match {
+    val gridRows = snapshotRows(spark, state, stores.gridState, GridStateSchema)
+    val wmRows: Seq[(String, String, java.sql.Timestamp)] = gridRows match {
+      case Some(rows) =>
+        rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getTimestamp(6))).distinct
+      case None => scanStore(spark, stores.candles, CandleSchema) match {
         case Some(pc) => Incremental.watermarks(pc).collect().toSeq
           .map(r => (r.getString(0), r.getString(1), r.getTimestamp(2)))
         case None => Seq.empty
@@ -293,15 +395,13 @@ object LivePipeline {
     //    row-group-pruned, O(batch window) regardless of history.
     phase("tick-append")
     val staged = Ticks.dedupSecond(ticks)
-    val rng = staged.agg(min(col("time")).as("lo"), max(col("time")).as("hi"))
-      .collect()(0)
-    val (lo, hi) = (rng.getTimestamp(0), rng.getTimestamp(1))
-    val prevTicks = readStore(spark, stores.ticks, Some(
+    val (lo, hi) = (new java.sql.Timestamp(loSec * 1000L),
+      new java.sql.Timestamp(hiSec * 1000L))
+    val prevTicks = readStore(spark, stores.ticks, TickSchema,
       col("dt").between(to_date(lit(lo)), to_date(lit(hi))) &&
-        col("t_s").between(lit(lo.getTime / 1000L), lit(hi.getTime / 1000L))))
+        col("t_s").between(lit(loSec), lit(hiSec)))
     val novel = prevTicks.map(p => Incremental.newRows(p, staged, Seq("pair", "time")))
       .getOrElse(staged)
-      .localCheckpoint() // written below AND screened for stragglers
     // ordered-socket contract tripwire, folded into the append's OWN
     // action as an observe metric: a NOVEL tick below the frozen candle
     // frontier arrived out of order — its bar is already final, so it can
@@ -317,7 +417,7 @@ object LivePipeline {
       novel.observe(lateObs,
         sum(when(thrCol.isNotNull && col("time") < thrCol, 1L)
           .otherwise(0L)).as("late")),
-      stores.ticks)
+      stores.ticks, TickSchema)
     val late = lateObs.get.get("late").collect { case l: Long => l }.getOrElse(0L)
     if (late > 0) println(
       s"[live-pipeline] WARN batch $batchId: $late out-of-order ticks " +
@@ -326,103 +426,88 @@ object LivePipeline {
 
     // 3) E1 candles: candle only the tick tail (literal per-pair
     //    threshold — the scan prunes to the unfrozen window), freeze only
-    //    closed bars
+    //    closed bars. A bar closes against its pair's max tick time; only
+    //    pairs in this batch can close a bar they have not closed before
+    //    (a pair's max moves only with its own ticks, and a replayed batch
+    //    carries the same pairs), so the batch's per-pair max — already on
+    //    the driver — is the bound, and other pairs' tails drop out here.
     phase("candles")
-    val durs = {
-      import spark.implicits._
-      allTfs.map(t => (t.code, t.durationSeconds.toLong)).toDF("timeframe", "dur")
-    }
-    val tail = readStoreBounded(spark, stores.ticks, thrBounds, strict = false)
+    val tail = readStoreBounded(spark, stores.ticks, TickSchema, thrBounds, strict = false)
       .getOrElse(sys.error("tick store missing after append"))
-      .localCheckpoint() // candled + max'd below
-    val mx = tail.groupBy("pair").agg(max(col("time")).as("max_t"))
     val cand = Ohlc.allTimeframes(tail, allTfs)
-    val candFinal = cand
-      .join(durs, "timeframe")
-      .join(broadcast(mx), "pair")
-      .filter(unix_timestamp(col("time")) + col("dur") <= unix_timestamp(col("max_t")))
-      .select(cand.columns.map(col).toSeq: _*)
+    // a lazy checkpoint is a plan barrier: the bar shuffles run here and
+    // the anti-join below plans against their output. Without it the
+    // optimizer pushes the anti-join under the bar aggregates into every
+    // timeframe branch — one broadcast of the existing window per branch,
+    // and the base bars computed once per branch
+    val candFinal = cand.filter(unix_timestamp(col("time")) +
+        element_at(typedlit(durByTf), col("timeframe")) <=
+        element_at(typedlit(maxSecByPair), col("pair")))
+      .localCheckpoint(eager = false)
     // recomputed bars can reach at most maxDur below a DEFINED threshold
-    // (bar start ≥ floor_tf(thr) > thr − dur); an open pair is unbounded.
-    // This window also CONTAINS the grid step's strictly-past-watermark
-    // candles (thr − maxDur ≤ minWm by min(a+b) ≥ min a + min b), so ONE
-    // checkpointed read serves the anti-join AND the grid tail.
+    // (bar start ≥ floor_tf(thr) > thr − dur); an open pair is unbounded
     val candAntiBounds = thrByPair.toSeq.sortBy(_._1)
       .map { case (p, s) => PairBound(p, s - maxDur, Nil) }
-    val candWindow = readStoreBounded(spark, stores.candles, candAntiBounds,
-      strict = false).map(_.localCheckpoint())
-    val novelCand = candWindow
+    val novelCand = readStoreBounded(spark, stores.candles, CandleSchema,
+        candAntiBounds, strict = false)
       .map(p => Incremental.newRows(p, candFinal, Seq("pair", "timeframe", "time")))
       .getOrElse(candFinal)
-      .localCheckpoint() // written now, folded into the grid below
-    writeStore(novelCand, stores.candles)
+    writeStore(novelCand, stores.candles, CandleSchema)
 
-    // 4) E2 grid: resume machines from the versioned snapshot, fold only
-    //    the candle tail — the checkpointed window + the bars just
-    //    written, cut to strictly-past-watermark by the broadcast of the
-    //    same O(keys) rows (no second store scan), persist facts + the
-    //    advanced snapshot
+    // 4) E2 grid: resume machines from the held snapshot, fold only the
+    //    candle tail — the store's strictly-past-watermark candles, which
+    //    now include the bars just written (one pruned scan, cut per key
+    //    by a literal map of the same O(keys) rows) — persist facts + the
+    //    advanced snapshot, and hold the advanced rows for the next batch
     phase("grid")
-    var novelFacts: Option[DataFrame] = None
-    val factsWindow = readStoreBounded(spark, stores.gridFacts, wmBounds,
-      strict = false).map(_.localCheckpoint())
-    // a missing pre-write window (first batch) is the empty window: the
-    // just-written bars alone feed the fold
-    locally {
-      val candAll = candWindow.map(_.unionByName(novelCand)).getOrElse(novelCand)
-      val tailCand =
-        if (wmRows.isEmpty) candAll
-        else {
-          import spark.implicits._
-          val wms = wmRows.toDF("pair", "timeframe", "wm")
-          candAll.join(broadcast(wms), Seq("pair", "timeframe"), "left")
-            .filter(col("wm").isNull || col("time") > col("wm"))
-            .drop("wm")
-        }
-      val tailC = tailCand.localCheckpoint()
-      if (!tailC.isEmpty) {
-        val stateDf = snapOpt.getOrElse(emptyState(spark))
-        // r16 optimization (guide §1.2): ONE resumed fold emits the fact
-        // rows AND the advanced per-cell state AND the per-key watermark
-        // advance (tagged rows, the trade-ledger shape) — previously the
-        // identical candle tail was exchanged and folded TWICE (facts +
-        // snapshot) and the watermark advance ran a third aggregation
-        // plus a full-outer join. Bit-exact: same machines, same sorted
-        // step order (the e2e oracle gates + LivePipelineSpec pin it).
-        val folded = Indicators.indicatorGridAdvanceResume(
-          tailC, indicators, periods, stateDf).localCheckpoint()
-        val facts = folded.filter(!col("is_state"))
-          .select(col("indicator"), col("pair"), col("timeframe"),
-            col("time"), col("period"), col("calc_version"), col("value"))
-        // incoming facts all sit strictly past their key's watermark (or
-        // in an exempt timeframe), so the non-strict window is a lossless
-        // (slightly wide) existing side for the anti-join
-        novelFacts = Some(factsWindow
-          .map(p => Incremental.newRows(p, facts,
-            Seq("indicator", "pair", "timeframe", "time", "period")))
-          .getOrElse(facts)
-          .localCheckpoint()) // written now, scanned by the signal tail
-        writeStore(novelFacts.get, stores.gridFacts)
-        writeSnapshotVersion(spark, stores.gridState, batchId,
-          folded.filter(col("is_state"))
-            .select(col("pair"), col("timeframe"), col("indicator"),
-              col("period"), col("n"), col("vec"), col("wm")))
+    val tailCand = readStoreBounded(spark, stores.candles, CandleSchema, wmBounds,
+        strict = true).getOrElse(sys.error("candle store missing after append"))
+    val tailC =
+      if (wmRows.isEmpty) tailCand
+      else {
+        val wmMap = wmRows.groupBy(_._1).map { case (p, rs) =>
+          p -> rs.map(r => r._2 -> r._3).toMap }
+        val wm = lookup(wmMap, col("pair"), col("timeframe"))
+        tailCand.filter(wm.isNull || col("time") > wm)
       }
+    val stateDf = localFrame(spark, gridRows.getOrElse(Array.empty), GridStateSchema)
+    // r16 optimization (guide §1.2): ONE resumed fold emits the fact rows
+    // AND the advanced per-cell state AND the per-key watermark advance
+    // (tagged rows, the trade-ledger shape). An empty tail folds no fact
+    // and re-emits the state unchanged: then nothing is written.
+    val (folded, nFacts, advanced) = checkpointFold(
+      Indicators.indicatorGridAdvanceResume(tailC, indicators, periods, stateDf),
+      s"live-grid-$batchId", GridStateSchema)
+    if (nFacts > 0) {
+      val facts = folded.filter(!col("is_state"))
+        .select(col("indicator"), col("pair"), col("timeframe"),
+          col("time"), col("period"), col("calc_version"), col("value"))
+      // incoming facts all sit strictly past their key's watermark (or
+      // in an exempt timeframe), so the non-strict window is a lossless
+      // (slightly wide) existing side for the anti-join
+      val novelFacts = readStoreBounded(spark, stores.gridFacts, FactSchema,
+          wmBounds, strict = false)
+        .map(p => Incremental.newRows(p, facts,
+          Seq("indicator", "pair", "timeframe", "time", "period")))
+        .getOrElse(facts)
+      writeStore(novelFacts, stores.gridFacts, FactSchema)
+      advanceSnapshot(spark, state, stores.gridState, batchId, GridStateSchema,
+        folded, advanced)
     }
 
-    // 5) F4 strategy tail: golden/dead SMA crosses over the grid facts
-    //    just appended — the reference deployment's signal flow, live,
-    //    same first-write-wins contract. A cross at a NEW bar needs its
-    //    previous bar's SMA row for the lag, so the input is the
-    //    NON-strict window already checkpointed above plus the facts just
-    //    written (no re-read); signals can only fire strictly past the
-    //    watermark, so the existing side is the strict bound. Derived
-    //    (short, long) = (min, max) of the configured periods — the
-    //    reference's configured cross pair.
+    // 5) F4 strategy tail: golden/dead SMA crosses over the grid facts —
+    //    the reference deployment's signal flow, live, same
+    //    first-write-wins contract. A cross at a NEW bar needs its
+    //    previous bar's SMA row for the lag, so the input is the fact
+    //    store's NON-strict watermark window, which now holds the facts
+    //    just written; signals can only fire strictly past the watermark,
+    //    so the existing side is the strict bound. Derived (short, long) =
+    //    (min, max) of the configured periods — the reference's configured
+    //    cross pair.
     if (periods.distinct.size >= 2 && indicators.contains("SMA")) {
       phase("signals")
       val (shortP, longP) = (periods.min, periods.max)
-      (factsWindow.toSeq ++ novelFacts.toSeq).reduceOption(_ unionByName _)
+      readStoreBounded(spark, stores.gridFacts, FactSchema, wmBounds, strict = false)
         .foreach { sigInput =>
           val sigs = graft.operators.Signals.strategy(
             sigInput.filter(col("indicator") === "SMA"), shortP, longP)
@@ -430,14 +515,12 @@ object LivePipeline {
           // existing side (the signal store has no timeframe column for
           // the exempt arm — and those pairs are startup-transient)
           val sigBounds = wmBounds.filter(_.exempt.isEmpty)
-          val prevSigs = readStoreBounded(spark, stores.signals, sigBounds,
-            strict = true)
-          val newSigs = prevSigs.map(p => Incremental.newRows(p, sigs,
+          val prevSigs = readStoreBounded(spark, stores.signals, SignalSchema,
+            sigBounds, strict = true)
+          val (newSigs, n) = checkpointCounting(prevSigs.map(p => Incremental.newRows(p, sigs,
               Seq("pair", "trigger_indicator_timeframe", "event_datetime")))
-            .getOrElse(sigs)
-            .localCheckpoint()
-          if (!newSigs.isEmpty)
-            writeStore(newSigs, stores.signals, timeCol = "event_datetime")
+            .getOrElse(sigs), s"live-signals-$batchId")
+          if (n > 0) writeStore(newSigs, stores.signals, SignalSchema, timeCol = "event_datetime")
         }
     }
 
@@ -453,46 +536,21 @@ object LivePipeline {
     //    trade's entry is never below min(frontier, open entry)).
     if (periods.distinct.size >= 2 && indicators.contains("SMA")) {
       phase("trades")
-      val stateCollected = collectLedgerState(spark, stores.tradeState)
-      val stateOpt = stateCollected.map(_._1)
-      val tradeBounds = stateCollected.map(_._2).getOrElse(Seq.empty)
-      readStoreBounded(spark, stores.signals, tradeBounds, strict = true)
+      val ledger = snapshotRows(spark, state, stores.tradeState, LedgerSchema)
+      val tradeBounds = ledger.map(ledgerBounds).getOrElse(Seq.empty)
+      readStoreBounded(spark, stores.signals, SignalSchema, tradeBounds, strict = true)
         .foreach { sigsWide =>
           // the pair-level scan bound is lossless-wide; the exact
           // per-(pair, timeframe) frontier cut happens here
-          val unfolded = stateOpt match {
-            case None => sigsWide
-            case Some(st) =>
-              sigsWide.join(
-                broadcast(st.select(col("pair"),
-                  col("timeframe").as("trigger_indicator_timeframe"),
-                  col("last_time").as("_front"))),
-                Seq("pair", "trigger_indicator_timeframe"), "left")
-                .filter(col("_front").isNull ||
-                  col("event_datetime") > col("_front"))
-                .drop("_front")
-          }
-          val hasState = stateOpt.isDefined
-          if (hasState || !unfolded.isEmpty) {
-            val folded = graft.operators.Backtest.tradesIncremental(
-                stateOpt.getOrElse(emptyTradeState(spark)), unfolded)
-              .toDF().localCheckpoint()
-            val closed = folded.filter(!col("is_state"))
-              .select(col("pair"), col("timeframe"), col("trade_no"),
-                col("entry_time"), col("entry_price"),
-                col("exit_time"), col("exit_price"), col("pnl"))
-            val prevTrades = readStoreBounded(spark, stores.trades,
-              tradeBounds, strict = false)
-            val newTrades = prevTrades.map(p => Incremental.newRows(p, closed,
-                Seq("pair", "timeframe", "trade_no")))
-              .getOrElse(closed).localCheckpoint()
-            if (!newTrades.isEmpty)
-              writeStore(newTrades, stores.trades, timeCol = "entry_time")
-            writeSnapshotVersion(spark, stores.tradeState, batchId,
-              folded.filter(col("is_state"))
-                .select(col("pair"), col("timeframe"), col("open"),
-                  col("entry_time"), col("entry_price"), col("n_closed"),
-                  col("last_time")))
+          val unfolded = ledger.fold(sigsWide)(rows =>
+            pastFrontier(sigsWide, rows, "trigger_indicator_timeframe", "event_datetime"))
+          if (ledger.isDefined || !unfolded.isEmpty) {
+            foldLedger(spark, state, stores.tradeState, stores.trades, batchId,
+              s"live-trades-$batchId", tradeBounds,
+              graft.operators.Backtest.tradesIncremental(
+                localFrame(spark, ledger.getOrElse(Array.empty), LedgerSchema),
+                unfolded).toDF(),
+              TradeSchema)
           }
         }
     }
@@ -509,56 +567,27 @@ object LivePipeline {
     //    (pair, timeframe, trade_no).
     if (periods.distinct.size >= 2 && indicators.contains("SMA")) {
       phase("trades-stopped")
-      val stopCollected = collectLedgerState(spark, stores.tradeStopState)
-      val stateOpt = stopCollected.map(_._1)
-      val stopBounds = stopCollected.map(_._2).getOrElse(Seq.empty)
+      val ledger = snapshotRows(spark, state, stores.tradeStopState, LedgerSchema)
+      val stopBounds = ledger.map(ledgerBounds).getOrElse(Seq.empty)
       // exact per-(pair, timeframe) frontier cut (the pair-level scan
       // bound is lossless-wide)
-      def pastFrontier(df: DataFrame, tfCol: String, timeCol: String): DataFrame =
-        stateOpt match {
-          case None => df
-          case Some(st) =>
-            df.join(broadcast(st.select(col("pair").as("_kp"),
-                col("timeframe").as("_ktf"), col("last_time").as("_front"))),
-                col("pair") === col("_kp") && col(tfCol) === col("_ktf"), "left")
-              .filter(col("_front").isNull || col(timeCol) > col("_front"))
-              .drop("_kp", "_ktf", "_front")
-        }
-      import spark.implicits._
-      val sigsCut = readStoreBounded(spark, stores.signals, stopBounds,
+      def cut(df: DataFrame, tfCol: String, timeCol: String): DataFrame =
+        ledger.fold(df)(rows => pastFrontier(df, rows, tfCol, timeCol))
+      val sigsCut = readStoreBounded(spark, stores.signals, SignalSchema, stopBounds,
           strict = true)
-        .map(pastFrontier(_, "trigger_indicator_timeframe", "event_datetime"))
-        .getOrElse(Seq.empty[(String, String, java.sql.Timestamp, String, Double)]
-          .toDF("pair", "trigger_indicator_timeframe", "event_datetime",
-            "event_type", "price"))
-      val candsCut = readStoreBounded(spark, stores.candles, stopBounds,
+        .map(cut(_, "trigger_indicator_timeframe", "event_datetime"))
+        .getOrElse(localFrame(spark, Array.empty, SignalSchema))
+      val candsCut = readStoreBounded(spark, stores.candles, CandleSchema, stopBounds,
           strict = true)
-        .map(pastFrontier(_, "timeframe", "time"))
-        .getOrElse(Seq.empty[(String, String, java.sql.Timestamp, Double)]
-          .toDF("pair", "timeframe", "time", "close"))
-        .localCheckpoint()
-      val hasState = stateOpt.isDefined
-      if (hasState || !candsCut.isEmpty) {
-        val folded = graft.operators.Backtest.tradesStoppedIncremental(
-            stateOpt.getOrElse(emptyTradeState(spark)), sigsCut, candsCut,
-            slPct, tpPct)
-          .toDF().localCheckpoint()
-        val closed = folded.filter(!col("is_state"))
-          .select(col("pair"), col("timeframe"), col("trade_no"),
-            col("entry_time"), col("entry_price"),
-            col("exit_time"), col("exit_price"), col("reason"), col("pnl"))
-        val prevStopped = readStoreBounded(spark, stores.tradesStopped,
-          stopBounds, strict = false)
-        val newStopped = prevStopped.map(p => Incremental.newRows(p, closed,
-            Seq("pair", "timeframe", "trade_no")))
-          .getOrElse(closed).localCheckpoint()
-        if (!newStopped.isEmpty)
-          writeStore(newStopped, stores.tradesStopped, timeCol = "entry_time")
-        writeSnapshotVersion(spark, stores.tradeStopState, batchId,
-          folded.filter(col("is_state"))
-            .select(col("pair"), col("timeframe"), col("open"),
-              col("entry_time"), col("entry_price"), col("n_closed"),
-              col("last_time")))
+        .map(cut(_, "timeframe", "time"))
+        .getOrElse(localFrame(spark, Array.empty, CandleSchema))
+      if (ledger.isDefined || !candsCut.isEmpty) {
+        foldLedger(spark, state, stores.tradeStopState, stores.tradesStopped, batchId,
+          s"live-trades-stopped-$batchId", stopBounds,
+          graft.operators.Backtest.tradesStoppedIncremental(
+            localFrame(spark, ledger.getOrElse(Array.empty), LedgerSchema),
+            sigsCut, candsCut, slPct, tpPct).toDF(),
+          StoppedTradeSchema)
       }
     }
 
@@ -580,114 +609,140 @@ object LivePipeline {
     }
   }
 
-  /** r16 optimization (guide §5 — the driver should do almost no data
-    * work, but O(pairs × timeframes) rows are driver-sized BY
-    * CONSTRUCTION): collect a ledger-state snapshot ONCE per batch and
-    * hand consumers a LocalRelation plus driver-derived scan bounds. The
-    * previous shape scanned the snapshot parquet in three separate plan
-    * branches per ledger per batch (bounds aggregate+collect, broadcast
-    * frontier, fold state side). Bounds: f = min last_time (0 when
-    * all-null — a DELIBERATE widening: the old aggregate+Row.getLong
-    * path would have thrown NPE on an all-null snapshot, and bound 0
-    * just widens the scan, losslessly), oe = min entry_time over open
-    * rows (MaxValue when none), bound = min(f, oe). */
-  private def collectLedgerState(spark: SparkSession, root: String)
-      : Option[(DataFrame, Seq[PairBound])] =
-    readLatestSnapshot(spark, root).map { df =>
-      val sel = df.select(col("pair"), col("timeframe"), col("open"),
-        col("entry_time"), col("entry_price"), col("n_closed"),
-        col("last_time"))
-      val rows = sel.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), sel.schema)
-      val bounds = rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
-        case (p, rs) =>
-          val fs = rs.flatMap(r => Option(r.getTimestamp(6)).map(_.getTime / 1000L))
-          val oes = rs.filter(r => !r.isNullAt(2) && r.getBoolean(2))
-            .flatMap(r => Option(r.getTimestamp(3)).map(_.getTime / 1000L))
-          val f = if (fs.nonEmpty) fs.min else 0L
-          val oe = if (oes.nonEmpty) oes.min else Long.MaxValue
-          PairBound(p, math.min(f, oe), Seq.empty)
-      }
-      (local, bounds)
+  /** Rows of `df` strictly past their (pair, timeframe) ledger frontier;
+    * keys the ledger has not seen pass whole. */
+  private def pastFrontier(df: DataFrame, ledger: Array[Row], tfCol: String,
+                           timeCol: String): DataFrame = {
+    val front = ledger.filterNot(_.isNullAt(6)).groupBy(_.getString(0)).map {
+      case (p, rs) => p -> rs.map(r => r.getString(1) -> r.getTimestamp(6)).toMap }
+    val f = lookup(front, col("pair"), col(tfCol))
+    df.filter(f.isNull || col(timeCol) > f)
+  }
+
+  /** One ledger step after its fold: append the closed trades the store
+    * lacks (first-write-wins on (pair, timeframe, trade_no)), then persist
+    * and hold the advanced state. Closed trades are counted on the fold's
+    * checkpoint, so a batch that closes none runs no anti-join. */
+  private def foldLedger(spark: SparkSession, state: LiveState, stateRoot: String,
+                         storePath: String, batchId: Long, name: String,
+                         bounds: Seq[PairBound], fold: DataFrame,
+                         storeSchema: StructType): Unit = {
+    val (folded, nClosed, advanced) = checkpointFold(fold, name, LedgerSchema)
+    if (nClosed > 0) {
+      val cols = "pair" +: storeSchema.fieldNames.filterNot(Set("pair", "t_s", "dt")).toSeq
+      val closed = folded.filter(!col("is_state")).select(cols.map(col): _*)
+      val prev = readStoreBounded(spark, storePath, storeSchema, bounds, strict = false)
+      val (newTrades, n) = checkpointCounting(prev.map(p => Incremental.newRows(p, closed,
+          Seq("pair", "timeframe", "trade_no"))).getOrElse(closed), s"$name-new")
+      if (n > 0) writeStore(newTrades, storePath, storeSchema, timeCol = "entry_time")
+    }
+    advanceSnapshot(spark, state, stateRoot, batchId, LedgerSchema, folded, advanced)
+  }
+
+  /** Scan bounds from a ledger snapshot's rows: f = min last_time (0 when
+    * all-null — a DELIBERATE widening: bound 0 just widens the scan,
+    * losslessly), oe = min entry_time over open rows (MaxValue when none),
+    * bound = min(f, oe). */
+  private def ledgerBounds(rows: Array[Row]): Seq[PairBound] =
+    rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
+      case (p, rs) =>
+        val fs = rs.flatMap(r => Option(r.getTimestamp(6)).map(_.getTime / 1000L))
+        val oes = rs.filter(r => !r.isNullAt(2) && r.getBoolean(2))
+          .flatMap(r => Option(r.getTimestamp(3)).map(_.getTime / 1000L))
+        val f = if (fs.nonEmpty) fs.min else 0L
+        val oe = if (oes.nonEmpty) oes.min else Long.MaxValue
+        PairBound(p, math.min(f, oe), Seq.empty)
     }
 
-  /** Empty trade-state frame in the [[graft.operators.LiveTradeFold]]
-    * state-row shape. */
-  private def emptyTradeState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, Boolean, java.sql.Timestamp, Double, Long,
-        java.sql.Timestamp)]
-      .toDF("pair", "timeframe", "open", "entry_time", "entry_price",
-        "n_closed", "last_time")
-  }
+  /** Driver rows as a frame (a local relation: reading it runs no job). */
+  private def localFrame(spark: SparkSession, rows: Array[Row],
+                         schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** The latest complete trade-state snapshot (gate/diagnostic surface):
     * open positions + per-key counters, None before the first fold. */
   def latestTradeState(spark: SparkSession, stores: Stores): Option[DataFrame] =
-    readLatestSnapshot(spark, stores.tradeState)
+    readLatestLedger(spark, stores.tradeState)
 
   /** The latest complete STOP-managed trade-state snapshot. */
   def latestStopTradeState(spark: SparkSession, stores: Stores): Option[DataFrame] =
-    readLatestSnapshot(spark, stores.tradeStopState)
+    readLatestLedger(spark, stores.tradeStopState)
+
+  /** A store read with its declared schema; None = store absent (an HDFS
+    * `exists` answer — never a caught read error, so a bad filter built
+    * on the frame still throws). */
+  private def scanStore(spark: SparkSession, path: String,
+                        schema: StructType): Option[DataFrame] = {
+    val p = new Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else Some(spark.read.schema(schema).parquet(path))
+  }
 
   /** Read a (pair, dt)-partitioned store, applying `pred` BEFORE dropping
     * the partition-only `dt` column so its literal dt conjuncts prune
     * partitions. None = store absent. */
-  private def readStore(spark: SparkSession, path: String,
-                        pred: Option[Column]): Option[DataFrame] =
-    probeStore(spark, path)
-      .map(df => pred.fold(df)(df.filter).drop("dt", "t_s"))
-
-  /** The ONE absent-store probe: only the READ may report "store absent"
-    * — a downstream filter-analysis error (e.g. a bound referencing a
-    * column the store lacks) must THROW, not silently disable the
-    * anti-join it feeds, so callers build their filters OUTSIDE this
-    * catch. */
-  private def probeStore(spark: SparkSession, path: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(path)
-      df.schema // force resolution
-      Some(df)
-    } catch { case _: AnalysisException => None }
+  private def readStore(spark: SparkSession, path: String, schema: StructType,
+                        pred: Column): Option[DataFrame] =
+    scanStore(spark, path, schema).map(_.filter(pred).drop("dt", "t_s"))
 
   /** First-write-wins append, partitioned by (pair, UTC date), carrying
     * the epoch-second BIGINT `t_s` the bounded reads prune row groups
-    * with (see [[PairBound]] for why a long, not the timestamp). */
-  private def writeStore(df: DataFrame, path: String,
+    * with (see [[PairBound]] for why a long, not the timestamp). Columns
+    * are written in the declared schema's order, whatever order the
+    * frame's plan produced (an anti-join leads with its keys). */
+  private def writeStore(df: DataFrame, path: String, schema: StructType,
                          timeCol: String = "time"): Unit =
     df.withColumn("dt", to_date(col(timeCol)))
       .withColumn("t_s", unix_timestamp(col(timeCol)))
+      .select(schema.fieldNames.map(col).toSeq: _*)
       .write.mode("append").partitionBy("pair", "dt").parquet(path)
 
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[graft.operators.GridState].toDF()
-  }
-
-  /** Latest `_SUCCESS`-complete snapshot version (columns: the GridState
-    * row + this key's `wm` candle watermark), if any. */
-  private def readLatestSnapshot(spark: SparkSession, root: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(root)
+  /** Newest `_SUCCESS`-complete snapshot version under `root` — a
+    * directory listing, no job. */
+  private def latestVersion(spark: SparkSession, root: String): Option[(Long, Path)] = {
+    val p = new Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
     val versions = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-      .filter(d => d.getName.startsWith("v") &&
-        fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-      .flatMap(d => scala.util.Try(
-        d.getName.stripPrefix("v").toLong).toOption.map(_ -> d))
-    if (versions.isEmpty) None
-    else Some(spark.read.parquet(versions.maxBy(_._1)._2.toString))
+      .filter(d => d.getName.startsWith("v") && fs.exists(new Path(d, "_SUCCESS")))
+      .flatMap(d => scala.util.Try(d.getName.stripPrefix("v").toLong).toOption.map(_ -> d))
+    if (versions.isEmpty) None else Some(versions.maxBy(_._1))
   }
 
-  /** Persist snapshot version `v<id>` (idempotent under batch replay via
+  /** Latest `_SUCCESS`-complete ledger snapshot version, if any. */
+  private def readLatestLedger(spark: SparkSession, root: String): Option[DataFrame] =
+    latestVersion(spark, root).map { case (_, d) =>
+      spark.read.schema(LedgerSchema).parquet(d.toString)
+    }
+
+  /** The newest snapshot's rows: the held copy while it is that version,
+    * else one read of the snapshot, held from then on. */
+  private def snapshotRows(spark: SparkSession, state: LiveState, root: String,
+                           schema: StructType): Option[Array[Row]] =
+    latestVersion(spark, root) match {
+      case None =>
+        state.held.remove(root)
+        None
+      case Some((v, dir)) =>
+        state.held.get(root).collect { case (hv, rows) if hv == v => rows }.orElse {
+          val rows = spark.read.schema(schema).parquet(dir.toString).collect()
+          state.held(root) = (v, rows)
+          Some(rows)
+        }
+    }
+
+  /** Persist the state rows of checkpointed fold output `folded` as
+    * snapshot version `v<id>` (idempotent under batch replay via
     * overwrite), then GC strictly older versions — the latest complete
     * version is always authoritative, so a kill anywhere here leaves a
-    * readable lineage. */
-  private def writeSnapshotVersion(spark: SparkSession, root: String,
-                                   id: Long, df: DataFrame): Unit = {
-    df.write.mode("overwrite").parquet(s"$root/v$id")
-    val p = new org.apache.hadoop.fs.Path(root)
+    * readable lineage — and hold `rows`, the same state, as that version. */
+  private def advanceSnapshot(spark: SparkSession, state: LiveState, root: String,
+                              id: Long, schema: StructType, folded: DataFrame,
+                              rows: Array[Row]): Unit = {
+    folded.filter(col("is_state")).select(schema.fieldNames.map(col).toSeq: _*)
+      .write.mode("overwrite").parquet(s"$root/v$id")
+    state.held(root) = (id, rows)
+    val p = new Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
       .foreach { d =>

@@ -13,7 +13,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** One serving path: a currency symbol exposed at a WebSocket path
   * (reference: ws_ticker_server.py:17-45 `StreamConfig`/`PATH_CONFIG_BY_PATH`
@@ -74,14 +74,17 @@ final class TickerServer(paths: Seq[PathConfig], port: Int = 0,
       }
     }
     acceptor.start()
-    heart = daemon("graft-ws-heartbeat") {
-      while (running.get()) {
-        Thread.sleep(heartbeatMillis)
-        if (running.get()) {
-          val p = s"""{"type":"heartbeat","timestamp":"$nowIso"}"""
-          registries.valuesIterator.foreach(broadcast(_, p))
+    heart = daemon(s"graft-ws-heartbeat-${server.getLocalPort}") {
+      // close() interrupts the sleep: that is the loop's exit, not an error
+      try {
+        while (running.get()) {
+          Thread.sleep(heartbeatMillis)
+          if (running.get()) {
+            val p = s"""{"type":"heartbeat","timestamp":"$nowIso"}"""
+            registries.valuesIterator.foreach(broadcast(_, p))
+          }
         }
-      }
+      } catch { case _: InterruptedException => () }
     }
     heart.start()
     server.getLocalPort
@@ -90,13 +93,13 @@ final class TickerServer(paths: Seq[PathConfig], port: Int = 0,
   /** `foreachBatch` target: reduce the micro-batch to the LATEST tick per
     * pair, cache + fan out each to its path's subscribers. Column contract:
     * (pair, time, bid, ask). */
-  def publishBatch(df: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val rows = df
-      .groupBy(col("pair"))
-      .agg(max_by(struct(col("time"), col("bid"), col("ask")), col("time")).as("t"))
-      .select(col("pair"), col("t.time"), col("t.bid"), col("t.ask"))
-      .collect() // one row per pair — edge-sized by construction
+  def publishBatch(df: DataFrame, batchId: Long): Unit =
+    publishLatest(TickerServer.latestPerPair(df).collect().toSeq)
+
+  /** Cache + fan out rows already reduced to one per pair, led by
+    * (pair, time, bid, ask) — the [[TickerServer.latestPerPair]] shape;
+    * trailing columns are ignored. */
+  def publishLatest(rows: Seq[Row]): Unit =
     rows.foreach { r =>
       val sym = r.getString(0).replace("/", "_")
       bySymbol.get(sym).foreach { cfg =>
@@ -107,7 +110,6 @@ final class TickerServer(paths: Seq[PathConfig], port: Int = 0,
         publish(cfg.path, payload)
       }
     }
-  }
 
   /** Publish one payload to a path: cache it (late joiners replay it on
     * connect) and broadcast to current subscribers. */
@@ -187,6 +189,20 @@ final class TickerServer(paths: Seq[PathConfig], port: Int = 0,
       s"Connection: Upgrade\r\nSec-WebSocket-Accept: $accept\r\n\r\n").getBytes(UTF_8))
     out.flush()
     (in, out, path)
+  }
+}
+
+object TickerServer {
+
+  /** One row per pair: its LATEST tick (pair, time, bid, ask), then any
+    * `extra` per-pair aggregates — edge-sized by construction. */
+  def latestPerPair(df: DataFrame, extra: Column*): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val agg = df.groupBy(col("pair"))
+      .agg(max_by(struct(col("time"), col("bid"), col("ask")), col("time")).as("t"),
+        extra: _*)
+    agg.select(Seq(col("pair"), col("t.time"), col("t.bid"), col("t.ask")) ++
+      agg.columns.drop(2).map(col): _*)
   }
 }
 

@@ -124,6 +124,22 @@ class E3ServingSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("E3: close() ends the heartbeat loop without an uncaught exception") {
+    val srv = new TickerServer(paths, heartbeatMillis = 60000L)
+    val port = srv.start()
+    val name = s"graft-ws-heartbeat-$port"
+    val hb = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .find(_.getName == name).getOrElse(fail(s"no thread named $name"))
+    val uncaught = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    hb.setUncaughtExceptionHandler((_: Thread, e: Throwable) => uncaught.set(e))
+    // close while the loop sits in its sleep — the interrupt's target
+    eventually(hb.getState == Thread.State.TIMED_WAITING, "heartbeat never slept")
+    srv.close()
+    hb.join(5000L)
+    assert(!hb.isAlive, "heartbeat thread outlived close()")
+    assert(uncaught.get == null, s"heartbeat died with ${uncaught.get}")
+  }
+
   private def eventually(cond: => Boolean, msg: => String,
                          timeoutMs: Long = 5000L): Unit = {
     val end = System.currentTimeMillis() + timeoutMs

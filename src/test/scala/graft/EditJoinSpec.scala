@@ -142,4 +142,11 @@ class EditJoinSpec extends SparkSpec {
     val got = collectPairs(EditJoin.editDistJoin(d, 3))
     assert(got === Seq((1L, 2L, 0L)))
   }
+
+  test("probe window: an inverted [lo, hi] emits no offsets instead of counting down") {
+    val w = Seq((-2, 1), (3, 3), (2, -1)).toDF("lo", "hi")
+      .select(col("lo"), explode(EditJoin.probeOffsets(col("lo"), col("hi"))).as("o"))
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
+    assert(w === Seq((-2, -2), (-2, -1), (-2, 0), (-2, 1), (3, 3)))
+  }
 }

@@ -466,6 +466,130 @@ class LivePipelineSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  /** Flat-scan-style batch `b`: 20 minutes × 2 ticks/min × 2 pairs. */
+  private def minuteBatch(b: Int): Seq[String] =
+    for (m <- 0 until 20; s <- Seq(0, 30); p <- Seq("USD_JPY", "EUR_JPY"))
+      yield {
+        val tot = b * 20 + m
+        val t = f"2024-01-01T${tot / 60}%02d:${tot % 60}%02d:$s%02d.000Z"
+        msg(p, t, 150.0 + (tot % 23) * 0.1, 150.05 + (tot % 23) * 0.1)
+      }
+
+  /** Runs `body`, counting the Spark jobs each `processBatch` phase fires:
+    * (batch id, phase) -> jobs, read from the phase job descriptions. */
+  private def countingJobs(body: => Unit): Map[(Long, String), Int] = {
+    val LiveJob = """live-batch (\d+): (.+)""".r
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .collect { case LiveJob(b, ph) => jobs.add((b.toLong, ph)) }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      // listener events post asynchronously: wait for the count to hold
+      var prev = -1
+      var cur = jobs.size
+      while (cur != prev) { Thread.sleep(200); prev = cur; cur = jobs.size }
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.toArray(Array.empty[(Long, String)]).toSeq.groupBy(identity)
+      .map { case (k, v) => k -> v.size }
+  }
+
+  test("live pipeline: a steady-state micro-batch stays within its job budget") {
+    // every phase armed (two periods: signals + both ledgers), one held
+    // state across batches as `start` runs it. The count depends on the
+    // plan shape, not the host: a change that adds a job per batch fails
+    // here, not only in the benchmark. Measured: 20 jobs in the first
+    // batch, then 28, 32 (signals and ledgers start), 34 from batch 3 on —
+    // 37, 69, 75, 79, 80, 80, 80, 80 before the per-batch job cut.
+    val budget = 34
+    val ps2 = Seq(2, 3)
+    val srv = new TickerServer(Seq(PathConfig("USD_JPY", "/ws/ticker_usd_jpy")),
+      heartbeatMillis = 60000L)
+    srv.start()
+    val root = Files.createTempDirectory("graft-livepipe-budget-").toString
+    try {
+      val st = LivePipeline.Stores(root)
+      val state = new LivePipeline.LiveState
+      val nBatches = 8
+      val jobs = countingJobs {
+        (0 until nBatches).foreach { b =>
+          LivePipeline.processBatch(parseAll(minuteBatch(b)), b.toLong, st, srv,
+            inds, ps2, tfs, compactEvery = 0, state = state)
+        }
+      }
+      val perBatch = (0 until nBatches).map(b =>
+        jobs.collect { case ((`b`, _), n) => n }.sum)
+      info(s"jobs per batch: ${perBatch.mkString(", ")}")
+      assert(jobs.keys.exists(_._2 == "trades") && jobs.keys.exists(_._2 == "signals"),
+        s"not every phase ran: ${jobs.keys.map(_._2).toSet}")
+      assert(jobs.collect { case ((b, "watermarks"), n) if b > 0 => n }.sum == 0,
+        "a trusted held snapshot was read back from disk")
+      assert(perBatch.drop(3).forall(_ <= budget),
+        s"steady-state batches fired ${perBatch.drop(3).mkString(", ")} jobs " +
+        s"(budget $budget): ${jobs.toSeq.sorted.mkString(", ")}")
+      assertStores(root, (0 until nBatches).flatMap(minuteBatch), ps2)
+    } finally srv.close()
+  }
+
+  test("live pipeline: declared store schemas equal what a reader infers") {
+    val ps2 = Seq(2, 3)
+    val srv = new TickerServer(Seq(PathConfig("USD_JPY", "/ws/ticker_usd_jpy")),
+      heartbeatMillis = 60000L)
+    srv.start()
+    val root = Files.createTempDirectory("graft-livepipe-schema-").toString
+    try {
+      val st = LivePipeline.Stores(root)
+      val state = new LivePipeline.LiveState
+      wire.grouped(25).zipWithIndex.foreach { case (ms, i) =>
+        LivePipeline.processBatch(parseAll(ms), i.toLong, st, srv,
+          inds, ps2, tfs, state = state)
+      }
+      import LivePipeline.Stores._
+      def latest(dir: String): String = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("v")).maxBy(_.getName.stripPrefix("v").toLong).toString
+      val declared = Seq(
+        st.ticks -> TickSchema, st.candles -> CandleSchema, st.gridFacts -> FactSchema,
+        st.signals -> SignalSchema, st.trades -> TradeSchema,
+        st.tradesStopped -> StoppedTradeSchema,
+        latest(st.gridState) -> GridStateSchema, latest(st.tradeState) -> LedgerSchema,
+        latest(st.tradeStopState) -> LedgerSchema)
+      declared.foreach { case (path, schema) =>
+        // names, types and order — the pair/dt partition columns last
+        assert(spark.read.parquet(path).schema.toDDL === schema.toDDL, path)
+      }
+    } finally srv.close()
+  }
+
+  test("live pipeline: a stale held state is reloaded, never trusted") {
+    val ps2 = Seq(2, 3)
+    val srv = new TickerServer(Seq(PathConfig("USD_JPY", "/ws/ticker_usd_jpy")),
+      heartbeatMillis = 60000L)
+    srv.start()
+    val root = Files.createTempDirectory("graft-livepipe-stale-").toString
+    try {
+      val st = LivePipeline.Stores(root)
+      val chunks = wire.grouped(25).toSeq
+      val held = new LivePipeline.LiveState
+      def run(i: Int, state: LivePipeline.LiveState): Unit =
+        LivePipeline.processBatch(parseAll(chunks(i)), i.toLong, st, srv,
+          inds, ps2, tfs, state = state)
+      (0 until 3).foreach(run(_, held))
+      // batch 3 advances every store and snapshot behind the holder's back
+      run(3, new LivePipeline.LiveState)
+      val jobs = countingJobs((4 until chunks.size).foreach(run(_, held)))
+      // batch 4 finds its held version behind the newest on disk and
+      // reloads (a read job); from batch 5 on the reloaded copy is current
+      assert(jobs.getOrElse((4L, "watermarks"), 0) > 0, s"stale grid state trusted: $jobs")
+      assert((5 until chunks.size).forall(b => !jobs.contains((b.toLong, "watermarks"))),
+        s"current grid state re-read: $jobs")
+      assertStores(root, wire, ps2)
+    } finally srv.close()
+  }
+
   test("live pipeline: a replayed micro-batch is a no-op on every store") {
     val srv = new TickerServer(Seq(PathConfig("USD_JPY", "/ws/ticker_usd_jpy")),
       heartbeatMillis = 60000L)
