@@ -591,6 +591,17 @@ object TextAnalysis {
     top.unionAll(singles).distinct()
   }
 
+  /** The largest piece vocabulary a tokenizer collects to the driver. */
+  private[graft] val MaxVocabRows: Int = 4000000
+
+  /** Refuse a vocabulary frame above `maxRows` rows BEFORE anything
+    * collects it: the size probe reads at most `maxRows + 1` rows, so a
+    * non-vocabulary frame fed by mistake fails here, not as a driver OOM. */
+  private[graft] def requireVocabBounded(vocab: DataFrame, maxRows: Int,
+                                         what: String): Unit =
+    require(vocab.limit(maxRows + 1).count() <= maxRows,
+      s"$what unexpectedly large (over $maxRows rows) — not vocabulary-bounded")
+
   /** L73 (encoding): greedy longest-match-first segmentation of every
     * word under a piece vocabulary — the WordPiece/BERT tokenizer
     * (Schuster & Nakajima 2012; Devlin et al. 2019), the OTHER tokenizer
@@ -618,10 +629,11 @@ object TextAnalysis {
                       textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val pieces = vocab.select(col("piece")).as[String].collect()
-    require(pieces.length <= 4000000,
-      s"wordpiece vocabulary unexpectedly large (${pieces.length} rows) — " +
-        "not vocabulary-bounded")
+    // materialized once: the size probe and the collect both read the
+    // checkpoint, not the corpus-scale vocabulary plan twice
+    val vocabCp = vocab.select(col("piece")).localCheckpoint()
+    requireVocabBounded(vocabCp, MaxVocabRows, "wordpiece vocabulary")
+    val pieces = vocabCp.as[String].collect()
     val bc = spark.sparkContext.broadcast(pieces.toSet)
     val docWords = docs
       .select(col("doc_id"), explode(TextOps.tokens(col(textCol))).as("word"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -115,13 +116,14 @@ object Unigram {
     * [[UniModel]] form: p = used/T as ONE IEEE division of exact integers
     * (identical operands to [[withProbs]]'s column division, so the two
     * paths are bit-equal), pFloor = 1/T. The collect is bounded by
-    * construction (≤ topV + one row per distinct character); the require
-    * keeps the bound loud if a caller ever feeds a non-model frame. */
-  private[graft] def collectModel(model: DataFrame): UniModel = {
-    val rows = model.select(col("piece"), col("used")).collect()
-    require(rows.length <= 4000000,
-      s"unigram model unexpectedly large (${rows.length} rows) — " +
-        "not vocabulary-bounded")
+    * construction (≤ topV + one row per distinct character); the bound
+    * is checked BEFORE the collect, so a non-model frame fed by mistake is
+    * refused without ever reaching the driver. */
+  private[graft] def collectModel(model: DataFrame,
+                                  maxRows: Int = TextAnalysis.MaxVocabRows): UniModel = {
+    val piecesUsed = model.select(col("piece"), col("used"))
+    TextAnalysis.requireVocabBounded(piecesUsed, maxRows, "unigram model")
+    val rows = piecesUsed.collect()
     var t = 0L
     rows.foreach(r => t += r.getLong(1))
     require(rows.nonEmpty && t > 0, "empty unigram model — no training tokens")
@@ -157,10 +159,15 @@ object Unigram {
     * over the word table that probe cost (one whole corpus-derived
     * aggregation per encode call at scale). */
   private[graft] def viterbiLocal(words: DataFrame, m: UniModel,
-                                  maxPiece: Int): Dataset[UniPath] = {
+                                  maxPiece: Int): Dataset[UniPath] =
+    viterbiBroadcast(words, words.sparkSession.sparkContext.broadcast(m), maxPiece)
+
+  /** [[viterbiLocal]] under a model the caller broadcast — and unpersists
+    * once the decode is materialized. */
+  private def viterbiBroadcast(words: DataFrame, bc: Broadcast[UniModel],
+                               maxPiece: Int): Dataset[UniPath] = {
     val spark = words.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(m)
     words.select(col("word"), col("cnt")).as[(String, Long)]
       .mapPartitions { it =>
         val mm = bc.value
@@ -319,9 +326,12 @@ object Unigram {
       .select(col("piece")).localCheckpoint(true)
     var i = 0
     while (i < iters) {
-      model = mStep(viterbiLocal(words, collectModel(model), maxPiece),
-          singles, keepV)
-        .localCheckpoint(true)
+      // the round's model copies leave the executors once its decode and
+      // re-count are materialized (the eager checkpoint)
+      val bc = words.sparkSession.sparkContext.broadcast(collectModel(model))
+      model = try mStep(viterbiBroadcast(words, bc, maxPiece), singles, keepV)
+          .localCheckpoint(true)
+        finally bc.unpersist()
       i += 1
     }
     model

@@ -4,7 +4,9 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -90,6 +92,17 @@ import graft.sources.Compact
   *    fixed number of Spark jobs independent of data volume (query-stage
   *    jobs per shuffle and broadcast, one per checkpoint/collect/write) —
   *    LivePipelineSpec pins it, so a plan-shape change fails tier-1;
+  *  - the batch runs INTERPRETED ([[BatchConf]], scoped to the batch and
+  *    restored after it, also on failure): each batch plans a few dozen
+  *    small queries with its own literal bounds inlined, so their
+  *    generated classes never repeat across batches and outnumber Spark's
+  *    100-entry codegen cache — every batch compiled ~190 classes, which
+  *    cost more than the rows they ran on (1,000-tick tail batch ~9 s).
+  *    Interpreted, a steady batch compiles none (LivePipelineSpec pins
+  *    the count); a benchmark `live_feed` pass
+  *    compiles 31 classes instead of 265, and its 1,000-tick tail batch
+  *    fell from a median 8.35 s to 5.90 s over ten seeds (shared 4-core
+  *    host), the catch-up batch with it;
   *  - store fragmentation is bounded by [[Compact.compactStore]] every
   *    `compactEvery` batches — a crash-safe partition-granular
   *    rewrite-and-swap (work ∝ fragmented partitions, not store size),
@@ -297,16 +310,53 @@ object LivePipeline {
     (cp, m("n").asInstanceOf[Long], m("state").asInstanceOf[Seq[Row]].toArray)
   }
 
+  /** The SQL settings a live batch runs under, as (key, value): no
+    * whole-stage fusion, and interpreted projections, predicates and
+    * orderings (why: SCALE SHAPE above). Keys are named through their
+    * typed [[SQLConf]] entries, so a Spark that drops one fails the
+    * build. */
+  private[graft] val BatchConf: Seq[(String, String)] = Seq(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString)
+
+  /** `body` with [[BatchConf]] set on `spark`'s session conf; every prior
+    * value (or its absence) is restored afterwards, also when `body`
+    * throws. Scoped on the caller's session rather than a child session:
+    * listeners on `spark.streams` must keep seeing the query. */
+  private def withBatchConf(spark: SparkSession)(body: => Unit): Unit = {
+    val conf = spark.sessionState.conf
+    val prior = BatchConf.map { case (k, _) =>
+      k -> (if (conf.contains(k)) Some(conf.getConfString(k)) else None) }
+    try {
+      BatchConf.foreach { case (k, v) => conf.setConfString(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => conf.setConfString(k, v)
+      case (k, None) => conf.unsetConf(k)
+    }
+  }
+
   /** One poll of the reference's deployment loop (also driven directly by
     * the spec's kill/restart harness). `state` holds the snapshots across
-    * the batches of one query; a fresh one reloads them from disk. */
+    * the batches of one query; a fresh one reloads them from disk. Runs
+    * under [[BatchConf]]. */
   def processBatch(batch: DataFrame, batchId: Long, stores: Stores,
                    server: TickerServer, indicators: Seq[String],
                    periods: Seq[Int], tfs: Seq[Timeframe],
                    compactEvery: Int = 16,
                    slPct: Double = 0.005, tpPct: Double = 0.01,
                    retainDays: Int = 0,
-                   state: LiveState = new LiveState): Unit = {
+                   state: LiveState = new LiveState): Unit =
+    withBatchConf(batch.sparkSession) {
+      runBatch(batch, batchId, stores, server, indicators, periods, tfs,
+        compactEvery, slPct, tpPct, retainDays, state)
+    }
+
+  private def runBatch(batch: DataFrame, batchId: Long, stores: Stores,
+                       server: TickerServer, indicators: Seq[String],
+                       periods: Seq[Int], tfs: Seq[Timeframe], compactEvery: Int,
+                       slPct: Double, tpPct: Double, retainDays: Int,
+                       state: LiveState): Unit = {
     val spark = batch.sparkSession
     // phase labels (guide §1.5): every Spark job this batch fires carries
     // the phase that submitted it, so a listener (E2eProbe / the UI) can

@@ -659,20 +659,30 @@ class PlanGuardSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
     in.addData(good)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-wirejson-").toString
-    val q = graft.operators.Ticks.fromWireJson(in.toDF().repartition(2)).writeStream
-      .option("checkpointLocation", ckpt)
-      .format("noop")
-      .start()
-    q.processAllAvailable()
-    // q.explain prints the last micro-batch's executed plan to Console.out
-    val buf = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(buf)) { q.explain() }
-    q.stop()
-    // AQE explain prints the final plan and then repeats the initial one —
-    // count parses in the executed (final) section only
-    val streamPlan = buf.toString.split("== Initial Plan ==")(0)
-    assert(streamPlan.nonEmpty, "q.explain() produced no plan output")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-wirejson-")
+    val streamPlan = try {
+      val q = graft.operators.Ticks.fromWireJson(in.toDF().repartition(2)).writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .format("noop")
+        .start()
+      try {
+        q.processAllAvailable()
+        // the last micro-batch's executed plan; an adaptive node counts
+        // by its final plan only (its initial plan repeats every parse)
+        import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan
+          .transformUp { case a: AdaptiveSparkPlanExec => a.executedPlan }
+          .toString
+      } finally q.stop()
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete(); ()
+      }
+      rm(ckpt.toFile)
+    }
+    assert(streamPlan.nonEmpty, "the query executed no micro-batch plan")
     assert(nParses(streamPlan) === 1,
       s"streaming wire parse must run from_json exactly once per row:\n$streamPlan")
   }

@@ -148,6 +148,15 @@ class UnigramSpec extends SparkSpec {
     }
   }
 
+  test("an over-bound model is refused by its size probe") {
+    // the bound is probed with limit(max + 1).count() before any collect
+    def model(n: Int) = (1 to n).map(i => (s"p$i", i.toLong)).toDF("piece", "used")
+    val ex = intercept[IllegalArgumentException](Unigram.collectModel(model(11), maxRows = 10))
+    assert(ex.getMessage === "requirement failed: unigram model unexpectedly large " +
+      "(over 10 rows) — not vocabulary-bounded")
+    assert(Unigram.collectModel(model(10), maxRows = 10).p.size === 10)
+  }
+
   test("empty corpus: encode yields no rows, train fails loudly") {
     val empty = docs(1L -> "   ")
     intercept[IllegalArgumentException] {
