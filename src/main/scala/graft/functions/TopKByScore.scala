@@ -21,8 +21,19 @@ import org.apache.spark.sql.types._
   * Ordering: score descending, id ascending on ties — fully deterministic.
   * Output: `array<struct<score double, id bigint>>` sorted best-first.
   * Null scores are ignored (contribute nothing).
+  *
+  * `distinctIds = true` keeps the top k of the input's DISTINCT entries:
+  * an entry equal (in the heap order) to one already held is not added
+  * again, so the result equals `distinct()` followed by the default mode
+  * without the distinct's shuffle. An entry is compared against the
+  * heap's contents (O(k)) only once it has qualified — the heap has room
+  * or the entry beats the current worst — and `merge` applies the same
+  * rule. Where the score is a function of the id (the KMV bottom-k in
+  * [[graft.operators.Sketches]]) this is distinct ids. The buffer and its
+  * serialized form are the same in both modes.
   */
 case class TopKByScore(scoreExpr: Expression, idExpr: Expression, k: Int,
+                       distinctIds: Boolean = false,
                        mutableAggBufferOffset: Int = 0,
                        inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, Long)]] {
@@ -43,23 +54,32 @@ case class TopKByScore(scoreExpr: Expression, idExpr: Expression, k: Int,
   override def createAggregationBuffer(): mutable.PriorityQueue[(Double, Long)] =
     mutable.PriorityQueue.empty(evictOrd)
 
+  private def offer(buf: mutable.PriorityQueue[(Double, Long)],
+                    e: (Double, Long)): Unit =
+    if (!distinctIds) {
+      buf.enqueue(e)
+      if (buf.size > k) buf.dequeue()
+    } else if (buf.size < k || evictOrd.gt(buf.head, e)) {
+      // an entry already held (or one no better than the worst) is a
+      // duplicate of the distinct set's top k, or outside it
+      if (!buf.exists(x => evictOrd.equiv(x, e))) {
+        buf.enqueue(e)
+        if (buf.size > k) buf.dequeue()
+      }
+    }
+
   override def update(buf: mutable.PriorityQueue[(Double, Long)],
                       input: InternalRow): mutable.PriorityQueue[(Double, Long)] = {
     val s = scoreExpr.eval(input)
     val id = idExpr.eval(input)
-    if (s != null && id != null) {
-      buf.enqueue((s.asInstanceOf[Double], id.asInstanceOf[Long]))
-      if (buf.size > k) buf.dequeue()
-    }
+    if (s != null && id != null)
+      offer(buf, (s.asInstanceOf[Double], id.asInstanceOf[Long]))
     buf
   }
 
   override def merge(buf: mutable.PriorityQueue[(Double, Long)],
                      other: mutable.PriorityQueue[(Double, Long)]): mutable.PriorityQueue[(Double, Long)] = {
-    other.foreach { e =>
-      buf.enqueue(e)
-      if (buf.size > k) buf.dequeue()
-    }
+    other.foreach(offer(buf, _))
     buf
   }
 
@@ -100,6 +120,11 @@ case class TopKByScore(scoreExpr: Expression, idExpr: Expression, k: Int,
 object TopKByScore {
   /** Column-API entry point: `top_k_by_score(score, id, k)`. */
   def apply(score: Column, id: Column, k: Int): Column =
+    apply(score, id, k, distinctIds = false)
+
+  /** Column-API entry point with the mode chosen (see the class scaladoc). */
+  def apply(score: Column, id: Column, k: Int, distinctIds: Boolean): Column =
     Bridge.column(TopKByScore(
-      Bridge.expression(score), Bridge.expression(id), k).toAggregateExpression())
+      Bridge.expression(score), Bridge.expression(id), k, distinctIds)
+      .toAggregateExpression())
 }

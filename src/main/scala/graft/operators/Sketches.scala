@@ -41,8 +41,10 @@ object Sketches {
     *
     * Per source, the sketch is the `k` smallest distinct portable 60-bit
     * shingle hashes (Beyer et al.'s k-minimum-values summary). The k-heap
-    * is a bounded [[graft.functions.TopKByScore]] partial aggregate, so a
-    * 100 TB source shuffles ≤ k rows, and sketches UNION by merging and
+    * is a bounded [[graft.functions.TopKByScore]] partial aggregate in its
+    * distinct-ids mode, so bottom-k is ONE shuffle (the group-by's; no
+    * `distinct()` before it), a 100 TB source shuffles ≤ k rows per
+    * partition, and sketches UNION by merging and
     * re-truncating — the mergeable-summary property that lets per-shard
     * sketches roll up without touching the corpus again. For sources A, B
     * the standard KMV estimate is
@@ -60,11 +62,15 @@ object Sketches {
 
   /** Per-source KMV sketch: the `k` smallest distinct portable 60-bit
     * shingle hashes, as a sorted array. Bounded TopKByScore heaps — ≤ k
-    * rows cross the shuffle per source. */
+    * rows per partition cross the shuffle per source. The token array is
+    * projected in its own column before the per-position shingle lambda
+    * reads it (see [[TextOps.shinglesOf]]), so each document is tokenized
+    * once. */
   def sourceSketch(docs: DataFrame, n: Int = 3, k: Int = 256): DataFrame = {
     require(n >= 1 && k >= 1, s"need n,k >= 1, got n=$n k=$k")
     bottomK(docs
-      .select(col("source"), explode(TextOps.shingles(col("text"), n)).as("g"))
+      .select(col("source"), TextOps.tokens(col("text")).as("toks"))
+      .select(col("source"), explode(TextOps.shinglesOf(col("toks"), n)).as("g"))
       .select(col("source"), TextOps.hash60(col("g")).as("h")), k)
   }
 
@@ -76,10 +82,13 @@ object Sketches {
   def mergeSketches(sketches: DataFrame, k: Int = 256): DataFrame =
     bottomK(sketches.select(col("source"), explode(col("sk")).as("h")), k)
 
+  /** Per-source bottom-k of `(source, h)` rows with duplicates: the heap's
+    * distinct-ids mode absorbs them, so this is one shuffle. */
   private def bottomK(hashes: DataFrame, k: Int): DataFrame =
-    hashes.distinct()
+    hashes
       .groupBy(col("source"))
-      .agg(graft.functions.TopKByScore(-col("h").cast("double"), col("h"), k).as("top"))
+      .agg(graft.functions.TopKByScore(-col("h").cast("double"), col("h"), k,
+        distinctIds = true).as("top"))
       .select(col("source"), transform(col("top"), x => x.getField("id")).as("sk"))
 
   /** Pairwise KMV Jaccard estimates over `(source, sk)` sketch rows. */

@@ -654,13 +654,12 @@ object TextAnalysis {
     * hit) is consumed, unknown positions advance one codepoint for one
     * unit. Identical semantics to the pointer-doubling jump table's
     * `max(l)` + `coalesce(bl, 1)` — proven row-for-row in
-    * TextAnalysisSpec. */
+    * TextAnalysisSpec. O(n · maxPiece) lookups for a word of n codepoints,
+    * so a word of any length (a base64 blob, say) has a defined count. */
   private[graft] def greedyPieceCount(w: String, vocab: Set[String],
                                       maxPiece: Int): Long = {
     val cps = w.codePoints.toArray
     val n = cps.length
-    require(n <= 4096,
-      s"pathological word of $n chars — not natural-language input")
     var i = 0
     var np = 0L
     while (i < n) {

@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   *    64-bit integer on both sides (DuckDB: `('0x' || substr(md5(x),1,15))::BIGINT`).
   *  - shingles are `n`-word grams over whitespace-split lowercased text,
   *    deduplicated (set semantics, as in the MinHash/Jaccard literature).
+  *    They are taken only from a token-array column that a projection
+  *    before them has materialized ([[tokens]], then [[shinglesOf]]):
+  *    Catalyst does not share a subexpression across a lambda boundary,
+  *    so tokenization inlined into the per-position shingle lambda would
+  *    run once per shingle position (quadratic in the document's words).
   */
 object TextOps {
 
@@ -37,7 +42,8 @@ object TextOps {
     * array and space-join each window. `transform` + `slice` keeps this
     * inside codegen. Empty (not partial) when the doc has < `n` tokens —
     * `sequence(a, b)` counts DOWN when b < a, so the short-doc case must be
-    * guarded explicitly. */
+    * guarded explicitly. `toks` must be a column reference to a projected
+    * token array (see the object scaladoc), not a tokenizing expression. */
   def shinglesOf(toks: Column, n: Int): Column =
     when(size(toks) >= n,
       array_distinct(
@@ -45,7 +51,4 @@ object TextOps {
           sequence(lit(1), size(toks) - (n - 1)),
           i => concat_ws(" ", slice(toks, i, lit(n))))))
       .otherwise(array().cast("array<string>"))
-
-  /** Distinct `n`-word shingles of a raw text column. */
-  def shingles(text: Column, n: Int): Column = shinglesOf(tokens(text), n)
 }

@@ -236,7 +236,9 @@ object LlmQueries {
        |p1 AS MATERIALIZED (
        |  SELECT piece, (used)::DOUBLE / (SELECT (t)::DOUBLE FROM t1) AS p FROM m1)""".stripMargin
 
-  /** Distinct 3-word shingle sets (DuckDB twin of [[graft.operators.TextOps.shingles]]). */
+  /** Distinct 3-word shingle sets (DuckDB twin of
+    * [[graft.operators.TextOps.shinglesOf]] over a projected
+    * [[graft.operators.TextOps.tokens]] column). */
   private val shingleCte =
     s"""$toksCte,
        |sh AS (

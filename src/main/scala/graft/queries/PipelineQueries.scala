@@ -210,7 +210,7 @@ object PipelineQueries {
     // fromWireJson a socket/Kafka stream feeds, SocketIngestSpec) — pair
     // symbol round-trips through the `_`/`/` normalization, prices through
     // %.6f formatting, time through ISO-8601 ms rendering and re-parse.
-    // r16 optimization (guide §2.5 input skew / the t26 valve): the
+    // r16 optimization (guide §2.5 input skew): the
     // format→parse chain is CPU-bound per row, and AQE coalesces the
     // post-dedup exchange to ONE partition at gate volume, serializing
     // ~6 s of codegen'd JSON work on a single task (measured, Profile16).

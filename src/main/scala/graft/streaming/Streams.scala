@@ -1328,14 +1328,12 @@ object Streams {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a maxFilesPerTrigger=1 micro-batch arrives as ONE partition; the
-        // shingle+MD5 stage is CPU-bound, so without an explicit fan-out it
-        // runs serially on that partition (measured 47.9 s vs 15.9 s for
-        // the full suite's t26 at 10× data). Same valve as
-        // Dedup.minhashSignatures' explicit repartition.
-        val wide = batch.repartition(
-          batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-        graft.operators.Sketches.sourceSketch(wide, n, k)
+        // no fan-out before the sketch: a maxFilesPerTrigger=1 micro-batch
+        // arrives as one partition, but tokenizing once and shingling the
+        // projected tokens is linear in the batch's text and the bottom-k
+        // heaps partial-aggregate on that partition, so the micro-batch
+        // runs one shuffle (the group-by's) of ≤ k rows per source
+        graft.operators.Sketches.sourceSketch(batch, n, k)
           .write.mode("append").parquet(ledgerPath)
         // periodic fragment roll-up: re-merging per source IS the ledger's
         // reader algebra (KMV union), so compaction is a no-op to any
@@ -1367,8 +1365,9 @@ object Streams {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // single-partition micro-batch + CPU-bound tokenize: fan out first
-        // (the t26 valve)
+        // a micro-batch arrives as one partition, and every document is
+        // tokenized and exploded to one row per word before the per-token
+        // min: spread the documents over the cores first
         val wide = batch.repartition(
           batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
         graft.operators.TextAnalysis.firstOccurrence(wide)
@@ -1470,8 +1469,9 @@ object Streams {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // single-partition micro-batch + CPU-bound segmentation: fan out
-        // first (the t26 valve)
+        // a micro-batch arrives as one partition, and gridding each
+        // document into span-word segments is per-row string work: spread
+        // the documents over the cores first
         val wide = batch.repartition(
           batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
         graft.operators.Dedup.gridSegments(wide.select("doc_id", "text"), span)
@@ -1510,8 +1510,9 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // single-partition micro-batch + CPU-bound DP: fan out first
-        // (the t26 valve)
+        // a micro-batch arrives as one partition, and the per-word
+        // Viterbi DP is the CPU-bound stage: spread the documents over the
+        // cores first
         val wide = batch.repartition(
           spark.sparkContext.defaultParallelism, col("doc_id"))
         graft.operators.Unigram.encodeWith(
@@ -1544,8 +1545,9 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // single-partition micro-batch + CPU-bound per-word folds: fan
-        // out first (the t26 valve)
+        // a micro-batch arrives as one partition, and folding every merge
+        // rule over each word's bytes is the CPU-bound stage: spread the
+        // documents over the cores first
         val wide = batch.repartition(
           spark.sparkContext.defaultParallelism, col("doc_id"))
         graft.operators.TextAnalysis.bpeEncodeBytes(

@@ -120,9 +120,9 @@ class PlanGuardSpec extends SparkSpec {
     assert(p.contains("ReusedExchange"), s"bm25 lost tf exchange reuse:\n$p")
   }
 
-  test("source sketch scans the corpus once: the pair join's broadcast side reuses the distinct exchange") {
+  test("source sketch scans the corpus once: the pair join reuses the group-by exchange") {
     // sourceSketchSim self-joins the per-source sketches; the heavy stage
-    // (shingle explode + hash + distinct shuffle) must be computed ONCE,
+    // (shingle explode + hash + bottom-k group-by shuffle) must be computed ONCE,
     // with the broadcast side re-aggregating from a ReusedExchange — two
     // corpus scans here would double the dominant cost at 100 TB
     val df = SparkEntry.queries("llm_source_sketch")(spark, d)
@@ -136,6 +136,28 @@ class PlanGuardSpec extends SparkSpec {
     assert(p.linesIterator.count(l => l.contains("Scan parquet") &&
       l.contains("documents")) === 1,
       s"expected exactly one documents scan:\n$p")
+  }
+
+  test("shingling never re-tokenizes inside a lambda: tokens are projected first") {
+    // Catalyst shares no subexpression across a lambda boundary, so a
+    // tokenizer (regexp_replace → trim → lower → split) inlined into the
+    // per-position shingle `transform` runs once per shingle position —
+    // quadratic in the document's words. Walk every node's expressions in
+    // the optimized plan: no lambda body may carry a tokenizer piece.
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Lower,
+      RegExpReplace, StringSplit}
+    for (q <- Seq("llm_source_sketch", "llm_dedup_minhash", "llm_dedup_ngram")) {
+      val opt = SparkEntry.queries(q)(spark, d).queryExecution.optimizedPlan
+      val bad = opt.collectWithSubqueries { case node => node }
+        .flatMap(_.expressions)
+        .flatMap(_.collect { case lf: LambdaFunction => lf })
+        .filter(_.function.exists {
+          case _: RegExpReplace | _: StringSplit | _: Lower => true
+          case _ => false
+        })
+      assert(bad.isEmpty,
+        s"$q: tokenization inside a lambda body:\n${bad.mkString("\n")}")
+    }
   }
 
   test("packing never sorts the full corpus on one task") {

@@ -21,8 +21,8 @@ class SourceSketchSpec extends SparkSpec {
 
   /** Brute-force Jaccard of two sources' distinct 3-shingle sets. */
   private def trueJaccard(x: String, y: String): Double = {
-    val sets = docs.select(col("source"),
-        explode(TextOps.shingles(col("text"), 3)).as("g"))
+    val sets = docs.select(col("source"), TextOps.tokens(col("text")).as("toks"))
+      .select(col("source"), explode(TextOps.shinglesOf(col("toks"), 3)).as("g"))
       .distinct().as[(String, String)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val (sx, sy) = (sets(x), sets(y))
@@ -79,7 +79,8 @@ class SourceSketchSpec extends SparkSpec {
       b <- base; off <- Gen.chooseNum(0L, 7L)
     } yield b + off)
     val prop = forAll(gen, Gen.chooseNum(1, 12)) { (hs: List[Long], k: Int) =>
-      // production bottomK runs distinct() before the heap; mirror that
+      // the default mode keeps duplicate entries: feed it distinct hashes
+      // (the distinct-ids mode bottomK uses is checked separately below)
       val df = hs.distinct.map(h => ("s", h)).toDF("source", "h")
         .groupBy(col("source"))
         .agg(graft.functions.TopKByScore(-col("h").cast("double"), col("h"), k).as("top"))
@@ -87,6 +88,43 @@ class SourceSketchSpec extends SparkSpec {
       val got = df.collect().head.getSeq[Long](0).toList
       val exp = hs.distinct.sorted.take(k)
       (got == exp) :| s"k=$k hashes=$hs got=$got exp=$exp"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("distinct-ids top-k ≡ distinct() then default top-k (duplicates, collapsed doubles, merged shards)") {
+    // the bottomK shape: score = -h as double, so adjacent 60-bit hashes
+    // share a score and only the id tie-break separates them. Rows repeat
+    // within and across partitions, and a duplicated shard is unioned in,
+    // so partial heaps holding the same entries meet in merge.
+    val hash = for {
+      b <- Gen.chooseNum(1L, (1L << 60) - 16); off <- Gen.chooseNum(0L, 7L)
+    } yield b + off
+    val gen = for {
+      pool <- Gen.nonEmptyListOf(hash)
+      rows <- Gen.nonEmptyListOf(for {
+        src <- Gen.oneOf("a", "b", "c"); h <- Gen.oneOf(pool)
+      } yield (src, h))
+      k <- Gen.chooseNum(1, 12)
+      parts <- Gen.chooseNum(1, 5)
+    } yield (rows, k, parts)
+    def topK(df: org.apache.spark.sql.DataFrame, k: Int, distinctIds: Boolean) =
+      df.groupBy(col("source"))
+        .agg(graft.functions.TopKByScore(-col("h").cast("double"), col("h"), k,
+          distinctIds).as("top"))
+        .collect().map(r => r.getString(0) ->
+          r.getSeq[org.apache.spark.sql.Row](1).map(e => (e.getDouble(0), e.getLong(1))))
+        .toMap
+    val prop = forAll(gen) { case (rows, k, parts) =>
+      val df = rows.toDF("source", "h").repartition(parts)
+      val in = df.unionByName(df.filter(col("h") % 2 === 0).repartition(parts))
+      val got = topK(in, k, distinctIds = true)
+      val exp = topK(in.distinct(), k, distinctIds = false)
+      val exact = rows.groupBy(_._1).map { case (src, xs) =>
+        src -> xs.map(_._2).distinct.sorted.take(k) }
+      (got == exp && got.map { case (src, es) => src -> es.map(_._2) } == exact) :|
+        s"k=$k parts=$parts rows=$rows got=$got exp=$exp"
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
     assert(res.passed, res.status.toString)

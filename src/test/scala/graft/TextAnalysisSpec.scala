@@ -286,6 +286,26 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got.getAs[Long]("n_pieces") === 4L)
   }
 
+  test("wordpieceEncode: a 10,000-codepoint word of one unknown character counts 10,000 pieces") {
+    val vocab = Seq("ab").toDF("piece") // "z" is out of vocabulary
+    val word = "z" * 10000
+    assert(TextAnalysis.greedyPieceCount(word, Set("ab"), 6) === 10000L)
+    val got = TextAnalysis.wordpieceEncode(Seq((1L, word)).toDF("doc_id", "text"), vocab)
+      .collect().head
+    assert(got.getAs[Long]("n_ws") === 1L)
+    assert(got.getAs[Long]("n_pieces") === 10000L)
+  }
+
+  test("wordpieceEncode: \"ab\" repeated 5,000 times counts 5,000 pieces") {
+    val vocab = Seq("ab").toDF("piece")
+    val word = "ab" * 5000
+    assert(TextAnalysis.greedyPieceCount(word, Set("ab"), 6) === 5000L)
+    val got = TextAnalysis.wordpieceEncode(Seq((1L, word)).toDF("doc_id", "text"), vocab)
+      .collect().head
+    assert(got.getAs[Long]("n_ws") === 1L)
+    assert(got.getAs[Long]("n_pieces") === 5000L)
+  }
+
   test("wordpieceVocab: every single char present; top cut by freq then lexical") {
     import org.apache.spark.sql.functions.col
     val d = Seq((1L, "aaab aaab xyz")).toDF("doc_id", "text")
