@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: runs every registered query at the driver's
   * SF dir, prints ONE JSON line. Hygiene (round-2): fixed (sorted) query
@@ -69,19 +68,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate synthesizes a size()>0 predicate from every
-      // explode and pushes it below exchanges with the full generator-input
-      // expression inlined — for compute-heavy array columns (shingling)
-      // that re-runs the computation serially on the scan partition.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (A/B profiling a subset
@@ -123,18 +111,26 @@ object Bench {
     // ledger. Threshold: a quarter of the bench's own cores of EXTERNAL
     // (ambient, pre-warm-up) load is enough to distort min-of-N.
     val loadBefore = loadavg
-    val loadThreshold = cpus.toDouble / 4.0
+    val loadThreshold = cpus / 4.0
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // per-cell Spark work of the last timed run: job and stage counts do
+    // not drift with the host, so a plan-shape change shows through noise
+    val metrics = CellMetrics.install(spark.sparkContext)
+    val work = scala.collection.mutable.Map.empty[String, CellMetrics.Counts]
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        val (t, counts) = metrics.measure {
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).count()
+          catch { case e: Throwable =>
+            failed += name
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          }
+          (System.nanoTime() - t0) / 1e9
         }
-        (System.nanoTime() - t0) / 1e9
+        work(name) = counts
+        t
       }
       name -> times.min
     }
@@ -216,8 +212,15 @@ object Bench {
       s""""batch_total":${f2(batchTotal)},"streaming_total":${f2(streamingTotal)}"""
     def line(qs: String) =
       s"""{"metric":"total","value":$total,"unit":"sec",$subtotalFields,"queries":$qs,"failed":$fl,"remeasured":$rm,"runs":$runs,"stat":"min",$loadFields,"sf":"$sfDir"}"""
+    def f3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+    val cells = names.map { n =>
+      val c = work(n)
+      s""""$n":{"jobs":${c.jobs},"stages":${c.stages},""" +
+        s""""task_s":${f3(c.taskMs / 1e3)},"shuffle_mb":${f3(c.shuffleBytes / 1e6)},""" +
+        s""""spill_mb":${f3(c.spillBytes / 1e6)}}"""
+    }.mkString("{", ",", "}")
     val full = line(healed.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}"))
+      .mkString("{", ",", "}")).stripSuffix("}") + s""","cells":$cells}"""
     // Full-precision record goes to a file (and stderr): the driver captures
     // only the last ~2000 chars of stdout, and the full line is ~4 KB — every
     // round before r7 recorded `parsed: null` because the one JSON line was

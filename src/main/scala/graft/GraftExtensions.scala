@@ -63,35 +63,3 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       throw new IllegalArgumentException(s"$name must be an int literal, got $other")
   }
 }
-
-object GraftExtensions {
-  import org.apache.spark.sql.SparkSession
-
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
-
-  /** A sibling session on the same SparkContext with graft's extensions
-    * installed — extensions apply only at session CREATION, so contexts
-    * whose root session was built without them (Verify/Bench) get the SQL
-    * surface through this. Cached per parent; SQL confs that affect plan
-    * shape are copied across so plans match the parent's. */
-  def sessionFor(parent: SparkSession): SparkSession = synchronized {
-    cache.getOrElseUpdate(parent, {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      try SparkSession.builder()
-        .config("spark.sql.shuffle.partitions",
-          parent.conf.get("spark.sql.shuffle.partitions"))
-        .config("spark.sql.session.timeZone",
-          parent.conf.get("spark.sql.session.timeZone"))
-        .config("spark.sql.optimizer.excludedRules",
-          parent.conf.get("spark.sql.optimizer.excludedRules", ""))
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      finally {
-        SparkSession.setActiveSession(parent)
-        SparkSession.setDefaultSession(parent)
-      }
-    })
-  }
-}

@@ -1,12 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Prints formatted plans for representative queries (scale audit aid). */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "llm_text_stats", "p11_props_parse", "q5_region_revenue", "llm_ann_topk")

@@ -856,7 +856,7 @@ object LlmQueries {
     // ImplicitCastInputTypes string contract are under the hash gate, not
     // just the Column-API path the other rows exercise.
     "llm_heavy_hitters_sql" -> ((s, d) => {
-      val ext = graft.GraftExtensions.sessionFor(s)
+      val ext = graft.Session.withExtensions(s)
       docsPar(ext, d).createOrReplaceTempView("graft_docs_sql")
       ext.sql(
         """WITH toks AS (
@@ -880,7 +880,7 @@ object LlmQueries {
     // every GraftExtensions function is now SQL-exercised. Same oracle as
     // llm_ann_topk.
     "llm_ann_sql" -> ((s, d) => {
-      val ext = graft.GraftExtensions.sessionFor(s)
+      val ext = graft.Session.withExtensions(s)
       embsPar(ext, d).createOrReplaceTempView("graft_embs_sql")
       ext.sql(
         """WITH q AS (

@@ -213,7 +213,8 @@ object PipelineQueries {
     // r16 optimization (guide §2.5 input skew): the
     // format→parse chain is CPU-bound per row, and AQE coalesces the
     // post-dedup exchange to ONE partition at gate volume, serializing
-    // ~6 s of codegen'd JSON work on a single task (measured, Profile16).
+    // ~6 s of codegen'd JSON work on a single task (re-measure with the
+    // `graft.Bench` per-cell record: task_s against the cell's wall time).
     // An explicit stable-keyed fan-out before the chain spreads it across
     // the session's cores; the extra exchange moves 4 narrow columns.
     "u4c_wire_ingest" -> ((s, d) =>

@@ -359,8 +359,9 @@ object LivePipeline {
                        state: LiveState): Unit = {
     val spark = batch.sparkSession
     // phase labels (guide §1.5): every Spark job this batch fires carries
-    // the phase that submitted it, so a listener (E2eProbe / the UI) can
-    // attribute the deployment's job count and wall time per step
+    // the phase that submitted it, so a listener (the `perfbench` trace's
+    // serving.LivePipeline.<phase> layers, or the UI) can attribute the
+    // deployment's job count and wall time per step
     def phase(name: String): Unit =
       spark.sparkContext.setJobDescription(s"live-batch $batchId: $name")
     phase("recover")

@@ -48,7 +48,7 @@ class BlocklistSpec extends SparkSpec {
   }
 
   test("blocklist_hits is SQL-callable through the session extensions") {
-    val s = graft.GraftExtensions.sessionFor(spark)
+    val s = graft.Session.withExtensions(spark)
     import s.implicits._
     Seq((1L, "slow aaaa")).toDF("doc_id", "text").createOrReplaceTempView("bl_docs")
     val got = s.sql(

@@ -5,18 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs — one per suite (lazy). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // InferFiltersFromGenerate synthesizes a size()>0 predicate from every
-    // explode and pushes it below exchanges with the full generator-input
-    // expression inlined — for compute-heavy array columns (shingling)
-    // that re-runs the computation serially on the scan partition.
-    .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 }
