@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftglue.Bridge
 
 /** The one place a graft Spark session is built. Every main and the test
   * suites run on the settings below, so a plan one of them prints is the
@@ -21,13 +22,10 @@ object Session {
   /** The SQL keys a graft session sets: what [[withExtensions]] copies. */
   val sqlKeys: Seq[String] = sqlSettings(1).map(_._1)
 
-  private def builder(sql: Seq[(String, String)]): SparkSession.Builder =
-    sql.foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
-
   /** A `local[cpus]` session with one shuffle partition per core, UTC
     * session time and no UI. Returns the existing session if there is one. */
   def local(cpus: Int): SparkSession =
-    builder(sqlSettings(cpus))
+    sqlSettings(cpus).foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -40,16 +38,21 @@ object Session {
     * whose root session was built without them get the SQL surface through
     * this. Cached per parent. It carries the parent's value of every key
     * in [[sqlKeys]] (an unset exclusion list as an empty one), so its plans
-    * match the parent's, and sets no core key: on an existing context Spark
-    * would ignore it. */
+    * match the parent's. It is built on the parent's context with no
+    * builder option and takes the keys on its own conf afterwards, so no
+    * conf reaches `SparkContext.getOrCreate` (which would log that it may
+    * not take effect). */
   def withExtensions(parent: SparkSession): SparkSession = synchronized {
     siblings.getOrElseUpdate(parent, {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      try builder(sqlKeys.map(k => k -> parent.conf.getOption(k).getOrElse("")))
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      finally {
+      try {
+        val sibling = Bridge.builderOn(parent.sparkContext)
+          .withExtensions(new GraftExtensions)
+          .getOrCreate()
+        sqlKeys.foreach(k => sibling.conf.set(k, parent.conf.getOption(k).getOrElse("")))
+        sibling
+      } finally {
         SparkSession.setActiveSession(parent)
         SparkSession.setDefaultSession(parent)
       }

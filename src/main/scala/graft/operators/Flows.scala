@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions.col
   */
 object Flows {
 
-  /** F2: candles for every configured timeframe (base 1m + resamples). */
+  /** F2: candles for every configured timeframe (base 1m + derived), one
+    * aggregate over the ticks. */
   def candleFlow(ticks: DataFrame, cfg: Config = Config.default): DataFrame = {
     val tfs = cfg.timeframes.map(c => Timeframe.byCode.getOrElse(c,
       throw new IllegalArgumentException(s"unknown timeframe code: $c")))

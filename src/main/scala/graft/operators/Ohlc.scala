@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * `min_by`/`max_by` are the exact Spark equivalents of the reference's
   * `(array_agg(x ORDER BY time))[1]` idiom, and deterministic here because
   * `time` is unique per pair after tick dedup (candle times unique per
-  * pair×timeframe by construction). One hash aggregate = one shuffle per
-  * timeframe; partial aggregation (map-side combine) applies, so at 100 TB
-  * the shuffle carries one row per (pair, bucket), not per tick.
+  * pair×timeframe by construction). [[allTimeframes]] builds every
+  * timeframe in ONE hash aggregate (one shuffle however many timeframes);
+  * partial aggregation (map-side combine) applies, so at 100 TB the shuffle
+  * carries one row per (pair, timeframe, bucket) per map task, not per tick.
   */
 object Ohlc {
 
@@ -76,7 +77,8 @@ object Ohlc {
   }
 
   /** A2: resample base candles into a coarser timeframe by epoch-floor
-    * bucketing (reference: transform_services.py:108-110). */
+    * bucketing (reference: transform_services.py:108-110). For candles
+    * already stored as 1m bars; [[allTimeframes]] builds from ticks. */
   def resample(candles: DataFrame, tf: Timeframe): DataFrame = {
     val d = tf.durationSeconds.toLong
     val bucket = timestamp_seconds(floor(unix_timestamp(col("time")) / d) * d)
@@ -91,13 +93,34 @@ object Ohlc {
         col("open"), col("high"), col("low"), col("close"))
   }
 
-  /** All configured timeframes from one tick set: base 1m + derived, unioned
-    * (the reference's per-table loop collapses into one DataFrame —
-    * src/etl/flows/transform.py:42-76). */
+  /** All configured timeframes from one tick set: base 1m plus each
+    * distinct derived timeframe, as one DataFrame (the reference's per-table
+    * loop, src/etl/flows/transform.py:42-76, builds each derived table from
+    * the 1m candles). Each tick is expanded to one `(timeframe, bucket)` key
+    * per timeframe and ONE aggregate builds every candle straight from the
+    * ticks. That equals [[resample]] over [[ohlcBase]] bit for bit: a
+    * derived bucket is the epoch-floor of the tick's MINUTE start, so it
+    * holds whole minutes, and its first bid by time is the first of its 1m
+    * opens (the same for high, low and close). Ticks with a NULL time are
+    * dropped, as the 1m `window` drops them. */
   def allTimeframes(ticks: DataFrame, tfs: Seq[Timeframe] = Timeframe.All): DataFrame = {
-    val base = ohlcBase(ticks)
-    tfs.filter(_.durationSeconds > Timeframe.Base.durationSeconds)
-      .map(resample(base, _))
-      .foldLeft(base)(_ unionByName _)
+    val kept = (Timeframe.Base +:
+      tfs.filter(_.durationSeconds > Timeframe.Base.durationSeconds)).distinct
+    val keys = array(kept.map(tf => struct(lit(tf.code).as("code"),
+      lit(tf.durationSeconds * 1000000L).as("us"))): _*)
+    val us = unix_micros(col("time"))
+    val minute = us - pmod(us, lit(Timeframe.Base.durationSeconds * 1000000L))
+    ticks.filter(col("time").isNotNull)
+      .select(col("pair"), col("time"), col("bid"), minute.as("minute"),
+        explode(keys).as("tf"))
+      .groupBy(col("pair"), col("tf.code").as("timeframe"),
+        (col("minute") - pmod(col("minute"), col("tf.us"))).as("bucket"))
+      .agg(
+        min_by(col("bid"), col("time")).as("open"),
+        max(col("bid")).as("high"),
+        min(col("bid")).as("low"),
+        max_by(col("bid"), col("time")).as("close"))
+      .select(col("pair"), col("timeframe"), timestamp_micros(col("bucket")).as("time"),
+        col("open"), col("high"), col("low"), col("close"))
   }
 }

@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   *  - golden cross (BUY):  prev_short <= prev_long AND short >  long
   *  - dead cross  (SELL):  prev_short >= prev_long AND short <  long
   *
-  * Scale notes: the self-join keys on (pair, timeframe, time, calc_version) —
-  * high-cardinality and uniform, so a shuffled hash join partitions cleanly;
-  * the subsequent lag window reuses the same (pair, timeframe) partitioning.
+  * Scale notes: the reference's self-join becomes a window. Both window
+  * passes, the one that pairs each bar's short and long rows and the lag,
+  * are partitioned by (pair, timeframe, calc_version): the cross input is
+  * at most ONE exchange, none when the input is already clustered by those
+  * keys (the SMA windows' pair partitioning is), and no join.
   * Warm-up rows carry NULL values; NULL comparisons are filtered out, so no
   * signal can fire before both SMAs are materialized. This is an
   * *intentional deviation* from the reference: Postgres NaN compares
@@ -25,21 +27,32 @@ import org.apache.spark.sql.functions._
   */
 object Signals {
 
-  /** Join short- and long-period SMA series into one row per bar with
-    * `short_value`/`long_value` plus their 1-bar lags. */
+  /** Short- and long-period SMA series as one row per bar with
+    * `short_value`/`long_value` plus their 1-bar lags. A bar is kept when
+    * it has a row of both periods: the row set of the reference's inner
+    * self-join on (pair, timeframe, time, calc_version), NULL warm-up
+    * values included. Assumes one row per (bar, period), as in a fact
+    * table. */
   def smaCrossInput(sma: DataFrame, shortPeriod: Int, longPeriod: Int): DataFrame = {
     require(shortPeriod < longPeriod,
       s"short period must be < long period ($shortPeriod >= $longPeriod)")
     val keys = Seq("pair", "timeframe", "time", "calc_version")
-    val s = sma.filter(col("period") === shortPeriod)
-      .select(keys.map(col) :+ col("value").as("short_value"): _*)
-    val l = sma.filter(col("period") === longPeriod)
-      .select(keys.map(col) :+ col("value").as("long_value"): _*)
-    val w = Window.partitionBy(col("pair"), col("timeframe"), col("calc_version"))
-      .orderBy(col("time"))
-    s.join(l, keys)
-      .withColumn("prev_short", lag(col("short_value"), 1).over(w))
-      .withColumn("prev_long", lag(col("long_value"), 1).over(w))
+    val series = Window.partitionBy(col("pair"), col("timeframe"), col("calc_version"))
+    val bars = series.orderBy(col("time"))
+    // within a series sorted by (time, period) a bar's short row is
+    // directly followed by its long row, when the bar has one: the only
+    // row that can follow it at the same time
+    val rows = series.orderBy(col("time"), col("period"))
+    // the reference's equi-join never matches a NULL key
+    sma.filter(col("period").isin(shortPeriod, longPeriod) &&
+        keys.map(col(_).isNotNull).reduce(_ && _))
+      .select(keys.map(col) ++ Seq(col("period"), col("value"),
+        lead(col("time"), 1).over(rows).as("next_time"),
+        lead(col("value"), 1).over(rows).as("long_value")): _*)
+      .filter(col("period") === shortPeriod && col("next_time") === col("time"))
+      .select(keys.map(col) ++ Seq(col("value").as("short_value"), col("long_value"),
+        lag(col("value"), 1).over(bars).as("prev_short"),
+        lag(col("long_value"), 1).over(bars).as("prev_long")): _*)
   }
 
   private def toEvents(crossed: DataFrame, eventType: String, shortPeriod: Int): DataFrame =

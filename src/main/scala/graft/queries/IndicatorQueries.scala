@@ -196,8 +196,10 @@ object IndicatorQueries {
       val candPrefix = candAll.filter(col("time") < lit(PipelineQueries.Cutoff))
       val existing = Indicators.indicatorFactsFused(candPrefix, inds, ps)
       val state = Indicators.indicatorGridSnapshot(candPrefix, inds, ps)
+      // one watermark per (pair, timeframe): bounded, so pinned broadcast
+      // (its input descends from the candle flow's explode)
       val wms = graft.operators.Incremental.watermarks(existing)
-      val tail = candAll.join(wms, Seq("pair", "timeframe"), "left")
+      val tail = candAll.join(broadcast(wms), Seq("pair", "timeframe"), "left")
         .filter(col("watermark").isNull || col("time") > col("watermark"))
         .drop("watermark")
       val merged = existing.unionByName(
@@ -2377,7 +2379,7 @@ object IndicatorQueries {
     "u3b_rsi_14_30m" -> rsiSql(14, "30m", 1800),
     "f3_indicator_grid" -> gridSql(Seq(14, 28), Seq(("1m", 60), ("5m", 300))),
     // candleFlow always carries the 1m base alongside the configured
-    // resamples, so the oracle grid lists it too
+    // derived timeframes, so the oracle grid lists it too
     "f3b_indicator_grid_wide" ->
       gridSql(Seq(14, 56), Seq(("1m", 60), ("30m", 1800), ("4h", 14400))),
     // the full 45-combo default grid (15 recursive CTE pairs + 15 SMA

@@ -885,8 +885,8 @@ object StreamQueries {
     }),
 
     // T18 (streaming strategy): golden/dead-cross detection as LIVE keyed
-    // state — the reference's strategy flow with the batch self-join
-    // replaced by a per-pair candling + SMA-ring fold (see
+    // state — the reference's strategy flow with the batch per-bar
+    // short/long pairing replaced by a per-pair candling + SMA-ring fold (see
     // Streams.crossSignalStream). Append-mode cutoff: the open minute at
     // shutdown never finalizes, so the oracle stops strictly before each
     // pair's max tick minute.

@@ -486,15 +486,12 @@ object LivePipeline {
     val tail = readStoreBounded(spark, stores.ticks, TickSchema, thrBounds, strict = false)
       .getOrElse(sys.error("tick store missing after append"))
     val cand = Ohlc.allTimeframes(tail, allTfs)
-    // a lazy checkpoint is a plan barrier: the bar shuffles run here and
-    // the anti-join below plans against their output. Without it the
-    // optimizer pushes the anti-join under the bar aggregates into every
-    // timeframe branch — one broadcast of the existing window per branch,
-    // and the base bars computed once per branch
+    // the closed-bar filter and the anti-join below reference only the bar
+    // keys, so the optimizer plans both beneath the one bar aggregate: the
+    // ticks of bars already stored drop out before they are aggregated
     val candFinal = cand.filter(unix_timestamp(col("time")) +
         element_at(typedlit(durByTf), col("timeframe")) <=
         element_at(typedlit(maxSecByPair), col("pair")))
-      .localCheckpoint(eager = false)
     // recomputed bars can reach at most maxDur below a DEFINED threshold
     // (bar start ≥ floor_tf(thr) > thr − dur); an open pair is unbounded
     val candAntiBounds = thrByPair.toSeq.sortBy(_._1)

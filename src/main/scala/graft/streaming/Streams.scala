@@ -684,7 +684,7 @@ object Streams {
 
   /** T18: streaming SMA-cross signal detection — the reference's strategy
     * flow (golden/dead cross, `transform_services.py:442-443,504-505`) as
-    * LIVE keyed state instead of a batch self-join: one
+    * LIVE keyed state instead of a batch cross input: one
     * `flatMapGroupsWithState` fold per pair does per-second first-wins
     * dedup, per-minute candling, and maintains a `longP`-close ring from
     * which both SMAs are computed at every finalized minute; a signal

@@ -2,7 +2,10 @@ package graft
 
 import graft.model.Timeframe
 import graft.operators.{Ohlc, Ticks}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 class OhlcSpec extends SparkSpec {
   import spark.implicits._
@@ -79,5 +82,77 @@ class OhlcSpec extends SparkSpec {
         $"open", $"high", $"low", $"close")
     assert(viaResample.exceptAll(direct).count() === 0)
     assert(direct.exceptAll(viaResample).count() === 0)
+  }
+
+  // ---- one-aggregate allTimeframes ≡ ohlcBase ∪ resample (ReferenceForms) ----
+
+  /** Ticks at distinct millisecond instants per pair over three hours:
+    * sparse enough that many minutes and some derived buckets are empty,
+    * with NULL and NaN bids and a few NULL times. */
+  private val tickGen: Gen[Seq[(String, Option[Long], Option[Double])]] = for {
+    n <- Gen.chooseNum(1, 400)
+    raw <- Gen.listOfN(n, for {
+      pair <- Gen.oneOf("A", "B", "C")
+      ms <- Gen.chooseNum(0L, 3L * 3600 * 1000 - 1)
+      nullTime <- Gen.frequency(40 -> false, 1 -> true)
+      bid <- Gen.frequency(
+        30 -> Gen.chooseNum(-5.0, 200.0).map(Option(_)),
+        5 -> Gen.oneOf(100.0, 100.5, 101.0).map(Option(_)),
+        1 -> Gen.const(Some(Double.NaN)),
+        1 -> Gen.const(None))
+    } yield (pair, if (nullTime) None else Some(ms), bid))
+  } yield raw.groupBy(t => (t._1, t._2)).values.map(_.head).toSeq
+
+  private val t0 = ts("2024-03-10 22:00:00").getTime
+
+  private def tickFrame(rows: Seq[(String, Option[Long], Option[Double])]): DataFrame =
+    rows.map { case (p, ms, b) =>
+      (p, ms.map(m => new java.sql.Timestamp(t0 + m)), b) }
+      .toDF("pair", "time", "bid").repartition(3)
+
+  /** Candle rows with every double as its raw bits, in a fixed order. */
+  private def bits(df: DataFrame): Seq[String] = {
+    def d(r: Row, i: Int) = if (r.isNullAt(i)) "null"
+      else java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    df.select("pair", "timeframe", "time", "open", "high", "low", "close").collect()
+      .map(r => (Seq(r.getString(0), r.getString(1), String.valueOf(r.get(2))) ++
+        (3 to 6).map(d(r, _))).mkString("|"))
+      .toSeq.sorted
+  }
+
+  private def checkProp(p: Prop, n: Int): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), p)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("allTimeframes ≡ ohlcBase ∪ resample, bit for bit (random ticks, duplicated codes)") {
+    val tfsGen = Gen.chooseNum(0, 8).flatMap(Gen.listOfN(_, Gen.oneOf(Timeframe.All)))
+    checkProp(forAll(tickGen, tfsGen) { (rows, tfs) =>
+      val ticks = tickFrame(rows)
+      val got = Ohlc.allTimeframes(ticks, tfs)
+      // a code listed twice is built once: the reference builds it per mention
+      val ref = ReferenceForms.allTimeframes(ticks, tfs.distinct)
+      val gotBits = bits(got)
+      val keys = gotBits.map(_.split('|').take(3).mkString("|"))
+      (got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty) :|
+        s"exceptAll differs for ${tfs.map(_.code)}" &&
+      (gotBits == bits(ref)) :| s"bits differ for ${tfs.map(_.code)}" &&
+      (keys.distinct.size == keys.size) :| "a (pair, timeframe, time) repeats"
+    }, n = 8)
+  }
+
+  test("allTimeframes over every timeframe subset equals the reference's rows for it") {
+    val rows = tickGen.pureApply(Gen.Parameters.default.withSize(400),
+      org.scalacheck.rng.Seed(11L))
+    val ticks = tickFrame(rows).cache()
+    try {
+      val ref = bits(ReferenceForms.allTimeframes(ticks, Timeframe.All))
+      assert(ref.nonEmpty)
+      for (k <- 0 to Timeframe.All.size; subset <- Timeframe.All.combinations(k)) {
+        val codes = (subset.map(_.code) :+ Timeframe.Base.code).toSet
+        assert(bits(Ohlc.allTimeframes(ticks, subset)) ===
+          ref.filter(r => codes(r.split('|')(1))), subset.map(_.code))
+      }
+    } finally ticks.unpersist()
   }
 }

@@ -82,6 +82,69 @@ class PlanGuardSpec extends SparkSpec {
         s"candle flow (want 1)")
   }
 
+  /** Runs `df` and returns its executed plan; an adaptive plan holds its
+    * final form once it has run. */
+  private def executed(df: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private object AqeWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Every node of an executed plan and of its subqueries, stages unwrapped. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan) =
+    AqeWalk.collectWithSubqueries(p) { case n => n }
+
+  private def exchangesRun(p: org.apache.spark.sql.execution.SparkPlan) =
+    planNodes(p).collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+
+  /** Runs `f` on a fresh temporary directory and deletes it afterwards. */
+  private def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    def rm(x: java.io.File): Unit = {
+      if (x.isDirectory) x.listFiles().foreach(rm)
+      x.delete(); ()
+    }
+    try f(dir.toString) finally rm(dir.toFile)
+  }
+
+  test("candle flow builds every timeframe in ONE exchange") {
+    // one aggregate over (pair, timeframe, bucket) keys; the resample
+    // chain shuffled once for the 1m bars and once per derived timeframe.
+    // The ticks are read back from parquet, as the spine's candle step
+    // reads them, so the tick dedup's exchange is not in the plan.
+    val cfg = new graft.Config(Map.empty)
+    assert(cfg.timeframes.size === 5)
+    withTempDir("graft-planguard-ticks-") { dir =>
+      graft.operators.Ticks.normalize(graft.sources.Tables.events(spark, d))
+        .write.mode("overwrite").parquet(dir)
+      val p = executed(graft.operators.Flows.candleFlow(spark.read.parquet(dir), cfg))
+      val ex = exchangesRun(p)
+      assert(ex.size === 1, s"candle flow ran ${ex.size} exchanges (want 1):\n$p")
+    }
+  }
+
+  test("SMA-cross strategy: no join, no dynamic pruning, ONE exchange") {
+    // facts partitioned by pair, as the live grid store is: the self-join
+    // form planned a broadcast join plus a dynamic-pruning subquery over
+    // this scan
+    withTempDir("graft-planguard-sma-") { dir =>
+      graft.operators.Indicators.indicatorFacts(
+          graft.queries.TradingQueries.candles1m(spark, d), Seq("SMA"), Seq(14, 28))
+        .write.mode("overwrite").partitionBy("pair").parquet(dir)
+      val p = executed(graft.operators.Signals.strategy(spark.read.parquet(dir), 14, 28))
+      val nodes = planNodes(p)
+      val joins = nodes.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      assert(joins.isEmpty, s"strategy plans a join:\n$p")
+      val dpp = nodes.flatMap(_.expressions).exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruning]))
+      assert(!dpp && !p.toString.contains("dynamicpruning"),
+        s"strategy plans a dynamic-pruning subquery:\n$p")
+      val ex = exchangesRun(p)
+      assert(ex.size === 1, s"strategy ran ${ex.size} exchanges (want 1):\n$p")
+    }
+  }
+
   test("q21 reads lineitem exactly thrice (l1 + semi + anti) and orders once") {
     // TPC-H Q21's EXISTS/NOT EXISTS require two correlated self-joins over
     // the fact — three lineitem references total. A fourth scan would mean
@@ -681,10 +744,9 @@ class PlanGuardSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
     in.addData(good)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-wirejson-")
-    val streamPlan = try {
+    val streamPlan = withTempDir("graft-wirejson-") { ckpt =>
       val q = graft.operators.Ticks.fromWireJson(in.toDF().repartition(2)).writeStream
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .format("noop")
         .start()
       try {
@@ -697,12 +759,6 @@ class PlanGuardSpec extends SparkSpec {
           .transformUp { case a: AdaptiveSparkPlanExec => a.executedPlan }
           .toString
       } finally q.stop()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(ckpt.toFile)
     }
     assert(streamPlan.nonEmpty, "the query executed no micro-batch plan")
     assert(nParses(streamPlan) === 1,

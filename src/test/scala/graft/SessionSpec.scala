@@ -12,6 +12,32 @@ class SessionSpec extends SparkSpec {
   private val InferFilters =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+  /** Runs `body` and returns what `SparkContext` logged at WARN meanwhile. */
+  private def sparkContextWarnings[A](body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-session-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("org.apache.spark.SparkContext").asInstanceOf[Logger]
+    capture.start()
+    logger.addAppender(capture)
+    try {
+      val out = body
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   test("a factory session carries every setting the factory owns") {
     assert(spark.sparkContext.master === "local[4]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
@@ -31,11 +57,15 @@ class SessionSpec extends SparkSpec {
       s"$InferFilters,org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
     // the sibling leaves `parent` as the active session; later suites
     // build theirs through getOrCreate, so hand back the suite's session
-    val (ext, again) = try (Session.withExtensions(parent), Session.withExtensions(parent))
+    val ((ext, again), warnings) = sparkContextWarnings {
+      try (Session.withExtensions(parent), Session.withExtensions(parent))
       finally {
         SparkSession.setActiveSession(spark)
         SparkSession.setDefaultSession(spark)
       }
+    }
+    assert(!warnings.exists(_.contains("Using an existing SparkContext")),
+      warnings.mkString("\n"))
     assert(ext ne parent)
     assert(ext.sparkContext eq spark.sparkContext)
     assert(again eq ext, "the sibling is cached per parent")
