@@ -45,10 +45,11 @@ object Incremental {
   def appendNew(existing: DataFrame, incoming: DataFrame, dedupKeys: Seq[String]): DataFrame =
     existing.unionByName(newRows(existing, incoming, dedupKeys))
 
-  /** The rows an idempotent append would write (anti-join on the dedup key).
-    * No `distinct` on the existing side: a left-anti join keeps the same
-    * rows whether or not that side repeats a key, and the dedup costs a
-    * shuffle stage. */
+  /** The rows an idempotent append would write (anti-join on the dedup key)
+    * — the first-write-wins step of the `LivePipeline` store appends and
+    * the streaming ledgers in `Streams`. No `distinct` on the existing
+    * side: a left-anti join keeps the same rows whether or not that side
+    * repeats a key, and the dedup costs a shuffle stage. */
   def newRows(existing: DataFrame, incoming: DataFrame, dedupKeys: Seq[String]): DataFrame =
     incoming.join(existing.select(dedupKeys.map(col): _*), dedupKeys, "left_anti")
 

@@ -1852,7 +1852,7 @@ object Indicators {
     def restore(n0: Long, v: Array[Double]): Unit
   }
 
-  private[graft] def fusedMachine(indicator: String, period: Int): FusedMachine =
+  private def fusedMachine(indicator: String, period: Int): FusedMachine =
     indicator match {
       case "SMA" => new FusedMachine {
         private val ring = new Array[Double](period)
@@ -1922,9 +1922,52 @@ object Indicators {
       case other => throw new IllegalArgumentException(s"unknown indicator: $other")
     }
 
+  /** The fused grid's cells for one (pair, timeframe) key: one
+    * [[FusedMachine]] per (indicator, period) spec, in spec order. Every
+    * fused-grid fold — one-shot, snapshot, resumed, live and streaming —
+    * builds, restores, steps and snapshots its machines here, so the cell
+    * state contract is written once. */
+  private[graft] final class GridCells(specs: Seq[(String, Int)]) {
+    private val cells = specs.toArray
+    private val machines = cells.map { case (ind, p) => fusedMachine(ind, p) }
+
+    /** Restore every cell of (`indicator`, `period`) from its snapshot; a
+      * snapshot of a cell not in the grid is ignored, and a cell with no
+      * snapshot starts fresh. */
+    def restore(indicator: String, period: Int, n: Long, vec: Seq[Double]): Unit =
+      for (i <- cells.indices if cells(i) == ((indicator, period)))
+        machines(i).restore(n, vec.toArray)
+
+    /** Step every cell over one close; one `row(indicator, period, value)`
+      * per cell, in spec order. */
+    def step[T](close: Double)(row: (String, Int, Option[Double]) => T): Seq[T] =
+      Vector.tabulate(cells.length) { i =>
+        row(cells(i)._1, cells(i)._2, machines(i).step(close))
+      }
+
+    /** Step every cell over one close, keeping no value. */
+    def advance(close: Double): Unit = machines.foreach(_.step(close))
+
+    /** One `row(indicator, period, n, vec)` per cell: its complete state. */
+    def snapshot[T](row: (String, Int, Long, Seq[Double]) => T): Iterator[T] =
+      cells.indices.iterator.map { i =>
+        val (n, vec) = machines(i).snapshot
+        row(cells(i)._1, cells(i)._2, n, vec.toSeq)
+      }
+  }
+
+  private[graft] object GridCells {
+    /** The (indicator, period) cells of a grid, indicator-major. */
+    def specs(indicators: Seq[String], periods: Seq[Int]): Seq[(String, Int)] = {
+      require(indicators.nonEmpty && periods.nonEmpty, "empty indicator grid")
+      for { ind <- indicators; p <- periods } yield (ind, p)
+    }
+  }
+
+  /** One cell's step function (the single-series properties check it). */
   private[graft] def fusedStep(indicator: String, period: Int): Double => Option[Double] = {
-    val m = fusedMachine(indicator, period)
-    m.step
+    val cells = new GridCells(Seq(indicator -> period))
+    c => cells.step(c)((_, _, v) => v).head
   }
 
   /** [[indicatorFacts]] with ONE shuffle instead of one per branch: every
@@ -1938,18 +1981,15 @@ object Indicators {
     * — independent of series length, same as the branch folds. */
   def indicatorFactsFused(candles: DataFrame, indicators: Seq[String], periods: Seq[Int],
                           calcVersion: String = CalcVersion): DataFrame = {
-    require(indicators.nonEmpty && periods.nonEmpty, "empty indicator grid")
-    val specs = for { ind <- indicators; p <- periods } yield (ind, p)
+    val specs = GridCells.specs(indicators, periods)
     val spark = candles.sparkSession
     import spark.implicits._
     candles.select($"pair", $"timeframe", $"time", $"close").as[CloseRow]
       .groupByKey(r => (r.pair, r.timeframe))
       .flatMapSortedGroups($"time") { case ((pair, tf), rows) =>
-        val steps = specs.map { case (ind, p) => (ind, p, fusedStep(ind, p)) }
+        val cells = new GridCells(specs)
         rows.flatMap { r =>
-          steps.iterator.map { case (ind, p, f) =>
-            IndicatorValue(ind, pair, tf, r.time, p, calcVersion, f(r.close))
-          }
+          cells.step(r.close)(IndicatorValue(_, pair, tf, r.time, _, calcVersion, _))
         }
       }.toDF()
   }
@@ -1965,117 +2005,52 @@ object Indicators {
     * O(cells), never O(history); the same shuffle/sort as the fact fold. */
   def indicatorGridSnapshot(candles: DataFrame, indicators: Seq[String],
                             periods: Seq[Int]): DataFrame = {
-    require(indicators.nonEmpty && periods.nonEmpty, "empty indicator grid")
-    val specs = for { ind <- indicators; p <- periods } yield (ind, p)
+    val specs = GridCells.specs(indicators, periods)
     val spark = candles.sparkSession
     import spark.implicits._
     candles.select($"pair", $"timeframe", $"time", $"close").as[CloseRow]
       .groupByKey(r => (r.pair, r.timeframe))
       .flatMapSortedGroups($"time") { case ((pair, tf), rows) =>
-        val machines = specs.map { case (ind, p) => (ind, p, fusedMachine(ind, p)) }
-        rows.foreach(r => machines.foreach(_._3.step(r.close)))
-        machines.iterator.map { case (ind, p, m) =>
-          val (n, vec) = m.snapshot
-          GridState(pair, tf, ind, p, n, vec.toSeq)
-        }
+        val cells = new GridCells(specs)
+        rows.foreach(r => cells.advance(r.close))
+        cells.snapshot(GridState(pair, tf, _, _, _, _))
       }.toDF()
   }
 
   /** [[indicatorFactsFused]] RESUMED from a [[indicatorGridSnapshot]]:
     * folds only the (new) `candles`, with each cell's machine restored
     * from its state row — keys absent from the snapshot start fresh (new
-    * pairs appear mid-stream for free). Sorted cogroup on (pair,
-    * timeframe): one exchange for the tail candles + one for the
-    * O(cells) state rows, so an incremental run's cost tracks the NEW
-    * data, never the history it resumes from. */
+    * pairs appear mid-stream for free). The fact rows of
+    * [[indicatorGridAdvanceResume]]: one exchange for the tail candles +
+    * one for the O(cells) state rows, so an incremental run's cost tracks
+    * the NEW data, never the history it resumes from. */
   def indicatorFactsFusedResume(candles: DataFrame, indicators: Seq[String],
                                 periods: Seq[Int], state: DataFrame,
-                                calcVersion: String = CalcVersion): DataFrame = {
-    val spark = candles.sparkSession
-    import spark.implicits._
-    resumeCogroup[IndicatorValue](candles, indicators, periods, state) {
-      (pair, tf, machines, rows) =>
-        rows.flatMap { r =>
-          machines.iterator.map { case (ind, p, m) =>
-            IndicatorValue(ind, pair, tf, r.time, p, calcVersion, m.step(r.close))
-          }
-        }
-    }
-  }
+                                calcVersion: String = CalcVersion): DataFrame =
+    indicatorGridAdvanceResume(candles, indicators, periods, state, calcVersion)
+      .filter(!col("is_state"))
+      .select(col("indicator"), col("pair"), col("timeframe"), col("time"),
+        col("period"), col("calc_version"), col("value"))
 
-  /** The shared resume preamble — the ONE place the snapshot/restore
-    * contract is wired (sorted cogroup of tail candles against the
-    * O(cells) state rows per (pair, timeframe), one restored machine per
-    * grid cell) — so the fact fold and the snapshot fold can never drift
-    * apart. Keys absent from the snapshot start fresh; keys present only
-    * in the snapshot still reach `emit` with no candle rows. */
-  private def resumeCogroup[T: org.apache.spark.sql.Encoder](
-      candles: DataFrame, indicators: Seq[String], periods: Seq[Int],
-      state: DataFrame)(
-      emit: (String, String, Seq[(String, Int, FusedMachine)],
-             Iterator[CloseRow]) => Iterator[T]): DataFrame = {
-    require(indicators.nonEmpty && periods.nonEmpty, "empty indicator grid")
-    val specs = for { ind <- indicators; p <- periods } yield (ind, p)
-    val spark = candles.sparkSession
-    import spark.implicits._
-    val st = state
-      .select($"pair", $"timeframe", $"indicator", $"period", $"n", $"vec")
-      .as[GridState]
-      .groupByKey(r => (r.pair, r.timeframe))
-    candles.select($"pair", $"timeframe", $"time", $"close").as[CloseRow]
-      .groupByKey(r => (r.pair, r.timeframe))
-      .cogroupSorted(st)($"time")() { case ((pair, tf), rows, states) =>
-        val byCell = states.map(s => (s.indicator, s.period) -> s).toMap
-        val machines = specs.map { case (ind, p) =>
-          val m = fusedMachine(ind, p)
-          byCell.get((ind, p)).foreach(s => m.restore(s.n, s.vec.toArray))
-          (ind, p, m)
-        }
-        emit(pair, tf, machines, rows)
-      }.toDF()
-  }
-
-  /** The ADVANCED snapshot after folding (new) `candles` into machines
-    * restored from `state` — the companion of [[indicatorFactsFusedResume]]
-    * that a CONTINUOUS E2 loop persists each round: snapshot(prefix) +
-    * fold(tail) ≡ snapshot(prefix ++ tail) bit-exactly, so per-round cost
-    * tracks the new candles, never the history. Keys present only in
-    * `state` re-emit their rows unchanged (cogroup unions keys); keys new
-    * in `candles` start fresh. */
-  def indicatorGridSnapshotResume(candles: DataFrame, indicators: Seq[String],
-                                  periods: Seq[Int], state: DataFrame): DataFrame = {
-    val spark = candles.sparkSession
-    import spark.implicits._
-    resumeCogroup[GridState](candles, indicators, periods, state) {
-      (pair, tf, machines, rows) =>
-        rows.foreach(r => machines.foreach(_._3.step(r.close)))
-        machines.iterator.map { case (ind, p, m) =>
-          val (n, vec) = m.snapshot
-          GridState(pair, tf, ind, p, n, vec.toSeq)
-        }
-    }
-  }
-
-  /** [[indicatorFactsFusedResume]] and [[indicatorGridSnapshotResume]] in
-    * ONE pass (r16 optimization, guide §1.2 "don't compute things twice"):
-    * the live deployment needs BOTH the fact rows and the advanced
-    * snapshot every batch, and running the two resume folds separately
-    * exchanges and folds the identical candle tail twice. This fold emits
-    * tagged rows — `is_state=false` fact rows while stepping, then one
-    * `is_state=true` state row per grid cell — exactly the
-    * [[Backtest.tradesIncremental]] ledger shape. The per-key candle
-    * watermark advance rides along (`wm` = max(state wm, last candle
-    * time), the sorted fold's last row), replacing the separate
-    * `groupBy(max)` + full-outer-join + broadcast the caller ran.
-    * Bit-exact vs the two-fold form: same machines, same restore, same
-    * sorted step order (LivePipelineSpec + the e2e oracle gates pin it).
+  /** The resumed grid fold: candles folded into machines restored from
+    * `state` (a [[indicatorGridSnapshot]] or a previous advance), emitting
+    * the fact rows AND the advanced snapshot in ONE pass (r16
+    * optimization, guide §1.2 "don't compute things twice"): the live
+    * deployment needs both every batch. Tagged rows — `is_state=false`
+    * fact rows while stepping, then one `is_state=true` state row per grid
+    * cell — exactly the [[Backtest.tradesIncremental]] ledger shape.
+    * snapshot(prefix) + fold(tail) ≡ snapshot(prefix ++ tail) bit-exactly.
+    * Sorted cogroup on (pair, timeframe): keys present only in `state`
+    * re-emit their rows unchanged; keys new in `candles` start fresh. The
+    * per-key candle watermark advance rides along (`wm` = max(state wm,
+    * last candle time), the sorted fold's last row), replacing the
+    * separate `groupBy(max)` + full-outer-join + broadcast the caller ran.
     * `state` may or may not carry a `wm` column (the empty-state path
     * does not). */
   def indicatorGridAdvanceResume(candles: DataFrame, indicators: Seq[String],
                                  periods: Seq[Int], state: DataFrame,
                                  calcVersion: String = CalcVersion): DataFrame = {
-    require(indicators.nonEmpty && periods.nonEmpty, "empty indicator grid")
-    val specs = for { ind <- indicators; p <- periods } yield (ind, p)
+    val specs = GridCells.specs(indicators, periods)
     val spark = candles.sparkSession
     import spark.implicits._
     val withWm =
@@ -2088,36 +2063,27 @@ object Indicators {
     candles.select($"pair", $"timeframe", $"time", $"close").as[CloseRow]
       .groupByKey(r => (r.pair, r.timeframe))
       .cogroupSorted(st)($"time")() { case ((pair, tf), rows, states) =>
-        val stSeq = states.toSeq
-        val oldWm = stSeq.flatMap(_.wm)
-          .reduceOption((a, b) => if (a.after(b)) a else b)
-        val byCell = stSeq.map(s => (s.indicator, s.period) -> s).toMap
-        val machines = specs.map { case (ind, p) =>
-          val m = fusedMachine(ind, p)
-          byCell.get((ind, p)).foreach(s => m.restore(s.n, s.vec.toArray))
-          (ind, p, m)
+        val cells = new GridCells(specs)
+        var oldWm: Option[Timestamp] = None
+        states.foreach { s =>
+          cells.restore(s.indicator, s.period, s.n, s.vec)
+          oldWm = (oldWm ++ s.wm).reduceOption((a, b) => if (a.after(b)) a else b)
         }
         var lastT: Timestamp = null
         val facts = rows.flatMap { r =>
           lastT = r.time
-          machines.iterator.map { case (ind, p, m) =>
+          cells.step(r.close) { (ind, p, v) =>
             GridFoldRow(is_state = false, ind, pair, tf, Option(r.time), p,
-              calcVersion, m.step(r.close), 0L, Nil, None)
+              calcVersion, v, 0L, Nil, None)
           }
         }
         // `++`'s right operand is by-name: the state rows build only after
         // the fact iterator is exhausted, so `lastT` and the machine
         // states are final here
         def stateRows = {
-          val wm = (oldWm, Option(lastT)) match {
-            case (Some(a), Some(b)) => Some(if (a.after(b)) a else b)
-            case (a, b) => a.orElse(b)
-          }
-          machines.iterator.map { case (ind, p, m) =>
-            val (n, vec) = m.snapshot
-            GridFoldRow(is_state = true, ind, pair, tf, None, p,
-              calcVersion, None, n, vec.toSeq, wm)
-          }
+          val wm = (oldWm ++ Option(lastT)).reduceOption((a, b) => if (a.after(b)) a else b)
+          cells.snapshot(GridFoldRow(is_state = true, _, pair, tf, None, _,
+            calcVersion, None, _, _, wm))
         }
         facts ++ stateRows
       }.toDF()

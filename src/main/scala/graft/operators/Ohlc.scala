@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.Timeframe
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** OHLC candle construction — the heart of the engine (SURVEY.md §7.2 step 3).
@@ -23,34 +23,15 @@ import org.apache.spark.sql.functions._
   */
 object Ohlc {
 
-  /** A1: 1-minute base candles from deduped ticks (bid prices). */
-  def ohlcBase(ticks: DataFrame): DataFrame =
-    ticks
-      .groupBy(col("pair"), window(col("time"), "1 minute"))
-      .agg(
-        min_by(col("bid"), col("time")).as("open"),
-        max(col("bid")).as("high"),
-        min(col("bid")).as("low"),
-        max_by(col("bid"), col("time")).as("close"))
-      .select(col("pair"), lit(Timeframe.Base.code).as("timeframe"),
-        col("window.start").as("time"),
-        col("open"), col("high"), col("low"), col("close"))
+  /** A1: 1-minute base candles from deduped ticks (bid prices): the
+    * [[allTimeframes]] aggregate with the 1m timeframe alone. */
+  def ohlcBase(ticks: DataFrame): DataFrame = candles(ticks, Nil)
 
   /** A1 variant carrying tick volume: `vol` = tick count per candle — the
     * standard volume proxy when the feed publishes no trade sizes. Same
     * single hash-aggregate plan as [[ohlcBase]]. */
   def ohlcBaseWithVol(ticks: DataFrame): DataFrame =
-    ticks
-      .groupBy(col("pair"), window(col("time"), "1 minute"))
-      .agg(
-        min_by(col("bid"), col("time")).as("open"),
-        max(col("bid")).as("high"),
-        min(col("bid")).as("low"),
-        max_by(col("bid"), col("time")).as("close"),
-        count(lit(1)).as("vol"))
-      .select(col("pair"), lit(Timeframe.Base.code).as("timeframe"),
-        col("window.start").as("time"),
-        col("open"), col("high"), col("low"), col("close"), col("vol"))
+    candles(ticks, Nil, count(lit(1)).as("vol"))
 
   /** Size-weighted average price per (pair, epoch-floor bucket):
     * `vwap = Σ(mid·size) / Σ(size)`. The numerator is an EXACT decimal sum
@@ -98,29 +79,44 @@ object Ohlc {
     * loop, src/etl/flows/transform.py:42-76, builds each derived table from
     * the 1m candles). Each tick is expanded to one `(timeframe, bucket)` key
     * per timeframe and ONE aggregate builds every candle straight from the
-    * ticks. That equals [[resample]] over [[ohlcBase]] bit for bit: a
-    * derived bucket is the epoch-floor of the tick's MINUTE start, so it
-    * holds whole minutes, and its first bid by time is the first of its 1m
-    * opens (the same for high, low and close). Ticks with a NULL time are
-    * dropped, as the 1m `window` drops them. */
-  def allTimeframes(ticks: DataFrame, tfs: Seq[Timeframe] = Timeframe.All): DataFrame = {
+    * ticks. That equals [[resample]] over 1m candles bit for bit: a derived
+    * bucket is the epoch-floor of the tick's MINUTE start, so it holds
+    * whole minutes, and its first bid by time is the first of its 1m opens
+    * (the same for high, low and close). Ticks with a NULL time are
+    * dropped, as a `window(time, "1 minute")` bucketing drops them. */
+  def allTimeframes(ticks: DataFrame, tfs: Seq[Timeframe] = Timeframe.All): DataFrame =
+    candles(ticks, tfs)
+
+  /** The one candle aggregate: epoch-floor buckets in µs, one key per
+    * tick and kept timeframe (no expansion when 1m is the only one), then
+    * open/high/low/close by `min_by`/`max`/`min`/`max_by` plus `extra`. */
+  private def candles(ticks: DataFrame, tfs: Seq[Timeframe], extra: Column*): DataFrame = {
     val kept = (Timeframe.Base +:
       tfs.filter(_.durationSeconds > Timeframe.Base.durationSeconds)).distinct
-    val keys = array(kept.map(tf => struct(lit(tf.code).as("code"),
-      lit(tf.durationSeconds * 1000000L).as("us"))): _*)
     val us = unix_micros(col("time"))
     val minute = us - pmod(us, lit(Timeframe.Base.durationSeconds * 1000000L))
-    ticks.filter(col("time").isNotNull)
-      .select(col("pair"), col("time"), col("bid"), minute.as("minute"),
-        explode(keys).as("tf"))
-      .groupBy(col("pair"), col("tf.code").as("timeframe"),
-        (col("minute") - pmod(col("minute"), col("tf.us"))).as("bucket"))
-      .agg(
-        min_by(col("bid"), col("time")).as("open"),
-        max(col("bid")).as("high"),
-        min(col("bid")).as("low"),
-        max_by(col("bid"), col("time")).as("close"))
-      .select(col("pair"), col("timeframe"), timestamp_micros(col("bucket")).as("time"),
-        col("open"), col("high"), col("low"), col("close"))
+    val live = ticks.filter(col("time").isNotNull)
+    val (keyed, timeframe, bucket) =
+      if (kept.size == 1)
+        (live.select(col("pair"), col("time"), col("bid"), minute.as("minute")),
+          lit(Timeframe.Base.code), col("minute"))
+      else {
+        val keys = array(kept.map(tf => struct(lit(tf.code).as("code"),
+          lit(tf.durationSeconds * 1000000L).as("us"))): _*)
+        (live.select(col("pair"), col("time"), col("bid"), minute.as("minute"),
+            explode(keys).as("tf")),
+          col("tf.code"), col("minute") - pmod(col("minute"), col("tf.us")))
+      }
+    val ohlc = Seq(
+      min_by(col("bid"), col("time")).as("open"),
+      max(col("bid")).as("high"),
+      min(col("bid")).as("low"),
+      max_by(col("bid"), col("time")).as("close")) ++ extra
+    val agg = keyed.groupBy(col("pair"), timeframe.as("timeframe"), bucket.as("bucket"))
+      .agg(ohlc.head, ohlc.tail: _*)
+    agg.select(agg.columns.toSeq.map {
+      case "bucket" => timestamp_micros(col("bucket")).as("time")
+      case c => col(c)
+    }: _*)
   }
 }

@@ -3,9 +3,12 @@ package graft.queries
 import java.nio.file.Files
 
 import graft.operators.Ticks
+import graft.serving.LivePipeline
+import graft.serving.LivePipeline.Stores
 import graft.streaming.{SeqTick, Streams, TickRow}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Driver-gate queries that EXECUTE the Structured Streaming layer — a real
   * `readStream` → stateful transform → sink run per invocation, not a batch
@@ -256,6 +259,24 @@ object StreamQueries {
     }
   }
 
+  private def empty(s: SparkSession, schema: StructType): DataFrame =
+    s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** A live deployment store read with its declared schema behind the
+    * store's existence check; an absent store reads as empty. */
+  private def liveStore(s: SparkSession, path: String, schema: StructType): DataFrame =
+    LivePipeline.scanStore(s, path, schema).getOrElse(empty(s, schema))
+
+  /** The open positions of a live ledger snapshot (none before the first
+    * fold) as trade rows with NULL exit fields. */
+  private def openPositions(s: SparkSession, ledger: Option[DataFrame]): DataFrame =
+    ledger.getOrElse(empty(s, Stores.LedgerSchema))
+      .filter(col("open"))
+      .select(col("pair"), col("timeframe"), (col("n_closed") + 1).as("trade_no"),
+        col("entry_time"), col("entry_price"),
+        lit(null).cast("timestamp").as("exit_time"),
+        lit(null).cast("double").as("exit_price"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // U4d (S1, the direct socket→engine path): the DSv2 `graft-websocket`
     // streaming source — a real RFC-6455 client inside a MicroBatchStream,
@@ -333,18 +354,10 @@ object StreamQueries {
     // Oracle: the w1 cross composition over the live-cutoff final bars,
     // per timeframe.
     "e2e_live_signals" -> ((s, d) => {
-      val st = graft.serving.LivePipeline.Stores(
-        E2eReplay.sharedRoot(s, d, "e2e_live_signals"))
-      val out =
-        try s.read.parquet(st.signals)
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          // a window with no crosses writes no store (sub-gate SFs):
-          // the oracle is empty there too
-          import s.implicits._
-          Seq.empty[(String, java.sql.Timestamp, String, Double, String, Int)]
-            .toDF("pair", "event_datetime", "event_type", "price",
-              "trigger_indicator_timeframe", "trigger_indicator_period")
-        }
+      val st = Stores(E2eReplay.sharedRoot(s, d, "e2e_live_signals"))
+      // a window with no crosses writes no store (sub-gate SFs): the
+      // oracle is empty there too
+      val out = liveStore(s, st.signals, Stores.SignalSchema)
       out.select(col("pair"),
           col("trigger_indicator_timeframe").as("timeframe"),
           unix_timestamp(col("event_datetime")).as("time_s"),
@@ -360,29 +373,12 @@ object StreamQueries {
     // closed trades from the store plus the open positions from the
     // state snapshot. Oracle: the f6b pairing over the live crosses.
     "e2e_live_trades" -> ((s, d) => {
-      val st = graft.serving.LivePipeline.Stores(
-        E2eReplay.sharedRoot(s, d, "e2e_live_trades"))
-      import s.implicits._
-      val emptyTrades =
-        Seq.empty[(String, String, Long, java.sql.Timestamp, Double,
-            java.sql.Timestamp, Double, Double)]
-          .toDF("pair", "timeframe", "trade_no", "entry_time",
-            "entry_price", "exit_time", "exit_price", "pnl")
-      val closed =
-        (try s.read.parquet(st.trades)
-         catch { case _: org.apache.spark.sql.AnalysisException => emptyTrades })
-          .select("pair", "timeframe", "trade_no", "entry_time",
-            "entry_price", "exit_time", "exit_price", "pnl")
-      val open = graft.serving.LivePipeline.latestTradeState(s, st) match {
-        case Some(ts) => ts.filter(col("open"))
-          .select(col("pair"), col("timeframe"),
-            (col("n_closed") + 1).as("trade_no"),
-            col("entry_time"), col("entry_price"),
-            lit(null).cast("timestamp").as("exit_time"),
-            lit(null).cast("double").as("exit_price"),
-            lit(null).cast("double").as("pnl"))
-        case None => emptyTrades
-      }
+      val st = Stores(E2eReplay.sharedRoot(s, d, "e2e_live_trades"))
+      val closed = liveStore(s, st.trades, Stores.TradeSchema)
+        .select("pair", "timeframe", "trade_no", "entry_time",
+          "entry_price", "exit_time", "exit_price", "pnl")
+      val open = openPositions(s, LivePipeline.latestTradeState(s, st))
+        .withColumn("pnl", lit(null).cast("double"))
       closed.unionByName(open)
         .select(col("pair"), col("timeframe"), col("trade_no"),
           unix_timestamp(col("entry_time")).as("entry_s"),
@@ -399,30 +395,13 @@ object StreamQueries {
     // state machine over the live-cutoff final bars + crosses, per
     // timeframe.
     "e2e_live_trades_stopped" -> ((s, d) => {
-      val st = graft.serving.LivePipeline.Stores(
-        E2eReplay.sharedRoot(s, d, "e2e_live_trades_stopped"))
-      import s.implicits._
-      val emptyTrades =
-        Seq.empty[(String, String, Long, java.sql.Timestamp, Double,
-            java.sql.Timestamp, Double, String, Double)]
-          .toDF("pair", "timeframe", "trade_no", "entry_time",
-            "entry_price", "exit_time", "exit_price", "reason", "pnl")
-      val closed =
-        (try s.read.parquet(st.tradesStopped)
-         catch { case _: org.apache.spark.sql.AnalysisException => emptyTrades })
-          .select("pair", "timeframe", "trade_no", "entry_time",
-            "entry_price", "exit_time", "exit_price", "reason", "pnl")
-      val open = graft.serving.LivePipeline.latestStopTradeState(s, st) match {
-        case Some(ts) => ts.filter(col("open"))
-          .select(col("pair"), col("timeframe"),
-            (col("n_closed") + 1).as("trade_no"),
-            col("entry_time"), col("entry_price"),
-            lit(null).cast("timestamp").as("exit_time"),
-            lit(null).cast("double").as("exit_price"),
-            lit(null).cast("string").as("reason"),
-            lit(null).cast("double").as("pnl"))
-        case None => emptyTrades
-      }
+      val st = Stores(E2eReplay.sharedRoot(s, d, "e2e_live_trades_stopped"))
+      val closed = liveStore(s, st.tradesStopped, Stores.StoppedTradeSchema)
+        .select("pair", "timeframe", "trade_no", "entry_time",
+          "entry_price", "exit_time", "exit_price", "reason", "pnl")
+      val open = openPositions(s, LivePipeline.latestStopTradeState(s, st))
+        .withColumn("reason", lit(null).cast("string"))
+        .withColumn("pnl", lit(null).cast("double"))
       closed.unionByName(open)
         .select(col("pair"), col("timeframe"), col("trade_no"),
           unix_timestamp(col("entry_time")).as("entry_s"),

@@ -719,8 +719,8 @@ object LivePipeline {
   /** A store read with its declared schema; None = store absent (an HDFS
     * `exists` answer — never a caught read error, so a bad filter built
     * on the frame still throws). */
-  private def scanStore(spark: SparkSession, path: String,
-                        schema: StructType): Option[DataFrame] = {
+  private[graft] def scanStore(spark: SparkSession, path: String,
+                               schema: StructType): Option[DataFrame] = {
     val p = new Path(path)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else Some(spark.read.schema(schema).parquet(path))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.operators.Incremental
+import graft.operators.{Incremental, PositionMachine}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
@@ -202,6 +202,7 @@ class GridProcessor(indicators: Seq[String], periods: Seq[Int], calcVersion: Str
       (String, String), graft.operators.CloseRow, graft.model.IndicatorValue] {
   import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
 
+  private val specs = graft.operators.Indicators.GridCells.specs(indicators, periods)
   @transient private var snap: ValueState[GridSnap] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -211,26 +212,15 @@ class GridProcessor(indicators: Seq[String], periods: Seq[Int], calcVersion: Str
   override def handleInputRows(key: (String, String),
       rows: Iterator[graft.operators.CloseRow],
       timerValues: TimerValues): Iterator[graft.model.IndicatorValue] = {
-    val specs = for { i <- indicators; p <- periods } yield (i, p)
-    val machines = specs.map { case (i, p) =>
-      (i, p, graft.operators.Indicators.fusedMachine(i, p))
-    }
-    if (snap.exists()) {
-      val byCell = snap.get().cells.map(c => (c.indicator, c.period) -> c).toMap
-      machines.foreach { case (i, p, m) =>
-        byCell.get((i, p)).foreach(c => m.restore(c.n, c.vec.toArray))
-      }
-    }
+    val cells = new graft.operators.Indicators.GridCells(specs)
+    if (snap.exists())
+      snap.get().cells.foreach(c => cells.restore(c.indicator, c.period, c.n, c.vec))
     val (pair, tf) = key
     val out = rows.toVector.sortBy(_.time.getTime).flatMap { r =>
-      machines.map { case (i, p, m) =>
-        graft.model.IndicatorValue(i, pair, tf, r.time, p, calcVersion, m.step(r.close))
-      }
+      cells.step(r.close)(
+        graft.model.IndicatorValue(_, pair, tf, r.time, _, calcVersion, _))
     }
-    snap.update(GridSnap(machines.map { case (i, p, m) =>
-      val (n, vec) = m.snapshot
-      GridCellSnap(i, p, n, vec.toSeq)
-    }))
+    snap.update(GridSnap(cells.snapshot(GridCellSnap).toSeq))
     out.iterator
   }
 }
@@ -757,10 +747,11 @@ object Streams {
     * long-only position state → CLOSED-trade ledger rows. The batch twin
     * is `Backtest.trades(Signals.strategy(...))`; here a BUY cross opens
     * the position (if flat) and a SELL cross closes it, emitting one
-    * [[TradePoint]] with `pnl = exit − entry` — the same alternating
-    * pairing the batch fold applies (cross semantics guarantee strict
-    * BUY/SELL alternation, so "if flat"/"if long" guards match the batch
-    * ledger row-for-row). The open position at shutdown stays in state
+    * [[TradePoint]] with `pnl = exit − entry` — the batch fold's
+    * [[graft.operators.PositionMachine]], restored from and written back
+    * to the keyed state each batch (cross semantics guarantee strict
+    * BUY/SELL alternation, so the ledger matches the batch one
+    * row-for-row). The open position at shutdown stays in state
     * (the batch ledger's final open row has no streaming counterpart — a
     * stream has no final row; the serving layer reads it from the state
     * store or the t5-style latest sink).
@@ -781,6 +772,10 @@ object Streams {
         var st = state.getOption.getOrElse(
           TradeState(-1L, Nil, Nil, 0.0, haveS = false, 0.0, haveL = false,
             inPos = false, 0L, 0.0, 0))
+        // the position half of the state, stepped by the one position
+        // machine; entries are minute starts, so the µs ↔ ms trip is exact
+        val pos = new PositionMachine()
+        pos.restore(pair, st.inPos, new Timestamp(st.entryUs / 1000), st.entry, st.n, null)
         val out = Vector.newBuilder[TradePoint]
         def usOf(t: Timestamp): Long =
           t.getTime / 1000 * 1000000L + t.getNanos / 1000
@@ -792,20 +787,15 @@ object Streams {
             val s = smaOf(ring, shortP); val l = smaOf(ring, longP)
             (s, l) match {
               case (Some(sv), Some(lv)) if st.haveS && st.haveL =>
-                if (st.prevS <= st.prevL && sv > lv) {
-                  // golden cross → BUY: open if flat
-                  if (!st.inPos)
-                    st = st.copy(inPos = true, entryUs = st.openMinute, entry = sv)
-                } else if (st.prevS >= st.prevL && sv < lv) {
-                  // dead cross → SELL: close if long
-                  if (st.inPos) {
-                    val n = st.n + 1
-                    out += TradePoint(pair, n,
-                      new Timestamp(st.entryUs / 1000), st.entry,
-                      new Timestamp(st.openMinute / 1000), sv, sv - st.entry)
-                    st = st.copy(inPos = false, n = n)
-                  }
-                }
+                // golden cross → BUY, dead cross → SELL, at the SMA value
+                val kind =
+                  if (st.prevS <= st.prevL && sv > lv) PositionMachine.Buy
+                  else if (st.prevS >= st.prevL && sv < lv) PositionMachine.Sell
+                  else PositionMachine.Other
+                val at = new Timestamp(st.openMinute / 1000)
+                if (kind != PositionMachine.Other && pos.step(kind, at, sv) != null)
+                  out += TradePoint(pair, pos.closed.toInt, pos.entryTime,
+                    pos.entryPrice, at, sv, sv - pos.entryPrice)
               case _ => ()
             }
             st = st.copy(ring = ring,
@@ -826,7 +816,8 @@ object Streams {
               st = st.copy(picks = CorrSecPick(sec, us, r.seq, r.bid) :: st.picks)
           }
         }
-        state.update(st)
+        state.update(st.copy(inPos = pos.open, entryUs = pos.entryTime.getTime * 1000,
+          entry = pos.entryPrice, n = pos.closed.toInt))
         out.result().iterator
       }
   }

@@ -1,7 +1,9 @@
 package graft
 
-import graft.operators.Flows
+import graft.operators.{Flows, GridFoldRow, GridStateWm, Indicators}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Test => SCTest}
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 class FlowsSpec extends SparkSpec {
   import spark.implicits._
@@ -107,5 +109,66 @@ class FlowsSpec extends SparkSpec {
         case _ =>
       }
     }
+  }
+
+  test("grid advance chained over random chunks ≡ one-shot facts and snapshot, bit for bit") {
+    // keys X/1m, X/5m, Y/1m from minute 0; Z/1m first seen mid-stream, in
+    // the chunk that starts at its first minute.
+    // Closes repeat now and then (RSI's flat-window branch); each chunk is
+    // one advance over the candles in [lo, hi) with the previous state
+    val inds = Seq("RSI", "SMA", "EMA")
+    val ps = Seq(2, 3, 7)
+    val minutes = 60
+    val t0 = ts("2024-01-01 00:00:00").getTime
+    val keys = Seq(("X", "1m", 1, 0), ("X", "5m", 5, 0), ("Y", "1m", 1, 0))
+    val caseGen = for {
+      zFrom <- Gen.chooseNum(10, minutes - 10)
+      candles <- Gen.sequence[Seq[Option[(String, String, Int, Double)]],
+          Option[(String, String, Int, Double)]](
+        for ((p, tf, step, from) <- keys :+ (("Z", "1m", 1, zFrom));
+             m <- from until minutes by step) yield
+          Gen.frequency(
+            6 -> Gen.chooseNum(-20, 20).map(k => Some((p, tf, m, 100.0 + k * 0.25))),
+            1 -> Gen.const(Some((p, tf, m, 100.0))),
+            1 -> Gen.const(None)))
+      k <- Gen.chooseNum(1, 4)
+      cuts <- Gen.listOfN(k, Gen.chooseNum(1, minutes - 1))
+    } yield (candles.flatten, 0 +: (zFrom +: cuts).distinct.sorted :+ minutes)
+    def frame(rows: Seq[(String, String, Int, Double)]) =
+      rows.map { case (p, tf, m, c) => (p, tf, new java.sql.Timestamp(t0 + m * 60000L), c) }
+        .toDF("pair", "timeframe", "time", "close")
+    def hex(d: Double) = java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+    def factBits(df: org.apache.spark.sql.DataFrame) = df
+      .select("indicator", "pair", "timeframe", "time", "period", "calc_version", "value")
+      .collect().map(r => Seq(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), r.get(5),
+        if (r.isNullAt(6)) "null" else hex(r.getDouble(6))).mkString("|")).toSeq.sorted
+    def cellBits(p: String, tf: String, ind: String, period: Int, n: Long, vec: Seq[Double]) =
+      Seq(p, tf, ind, period, n, vec.map(hex).mkString(",")).mkString("|")
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8),
+      forAll(caseGen) { case (rows, edges) =>
+        var state = Seq.empty[GridStateWm]
+        var facts = Seq.empty[String]
+        for ((lo, hi) <- edges.zip(edges.tail)) {
+          val out = Indicators.indicatorGridAdvanceResume(
+            frame(rows.filter(r => r._3 >= lo && r._3 < hi)), inds, ps, state.toDF())
+          facts ++= factBits(out.filter(!col("is_state")))
+          state = out.filter(col("is_state")).as[GridFoldRow].collect().toSeq
+            .map(r => GridStateWm(r.pair, r.timeframe, r.indicator, r.period, r.n, r.vec, r.wm))
+        }
+        val all = frame(rows)
+        val oneShotCells = Indicators.indicatorGridSnapshot(all, inds, ps).collect()
+          .map(r => cellBits(r.getString(0), r.getString(1), r.getString(2), r.getInt(3),
+            r.getLong(4), r.getSeq[Double](5))).toSeq.sorted
+        val lastTime = rows.groupBy(r => (r._1, r._2)).map { case (k, rs) =>
+          k -> new java.sql.Timestamp(t0 + rs.map(_._3).max * 60000L) }
+        (facts.sorted == factBits(Indicators.indicatorFactsFused(all, inds, ps))) :|
+          "chained facts differ from indicatorFactsFused" &&
+        (state.map(s => cellBits(s.pair, s.timeframe, s.indicator, s.period, s.n, s.vec))
+          .sorted == oneShotCells) :| "final state differs from indicatorGridSnapshot" &&
+        state.forall(s => s.wm == lastTime.get((s.pair, s.timeframe))) :|
+          "a key's watermark is not its last candle time" &&
+        rows.exists(_._1 == "Z") :| "no key first seen mid-stream"
+      })
+    assert(res.passed, res.status.toString)
   }
 }

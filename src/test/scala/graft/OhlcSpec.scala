@@ -155,4 +155,23 @@ class OhlcSpec extends SparkSpec {
       }
     } finally ticks.unpersist()
   }
+
+  test("ohlcBase and ohlcBaseWithVol ≡ the 1-minute window form, bit for bit (random ticks)") {
+    checkProp(forAll(tickGen) { rows =>
+      val ticks = tickFrame(rows)
+      val base = Ohlc.ohlcBase(ticks)
+      val refBase = ReferenceForms.ohlcBase(ticks)
+      val withVol = Ohlc.ohlcBaseWithVol(ticks)
+      val refVol = ReferenceForms.ohlcBaseWithVol(ticks)
+      def vols(df: DataFrame) = df.select("pair", "time", "vol").collect()
+        .map(r => s"${r.getString(0)}|${r.get(1)}|${r.getLong(2)}").toSeq.sorted
+      (base.columns.toSeq == refBase.columns.toSeq &&
+        withVol.columns.toSeq == refVol.columns.toSeq) :| "columns differ" &&
+      (base.exceptAll(refBase).isEmpty && refBase.exceptAll(base).isEmpty) :|
+        "ohlcBase: exceptAll differs" &&
+      (bits(base) == bits(refBase)) :| "ohlcBase: bits differ" &&
+      (bits(withVol) == bits(refVol)) :| "ohlcBaseWithVol: bits differ" &&
+      (vols(withVol) == vols(refVol)) :| "ohlcBaseWithVol: vol differs"
+    }, n = 8)
+  }
 }
