@@ -30,6 +30,24 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 
+  /** `body` with `settings` set on `spark`'s session conf. Every prior
+    * value is restored afterwards, and a key that was not set is unset
+    * again, also when `body` throws. Scoped on the caller's session rather
+    * than a child session, so listeners on `spark.streams` keep seeing a
+    * query started in `body`. */
+  def withConf[A](spark: SparkSession, settings: Seq[(String, String)])(body: => A): A = {
+    val conf = spark.sessionState.conf
+    val prior = settings.map { case (k, _) =>
+      k -> (if (conf.contains(k)) Some(conf.getConfString(k)) else None) }
+    try {
+      settings.foreach { case (k, v) => conf.setConfString(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => conf.setConfString(k, v)
+      case (k, None) => conf.unsetConf(k)
+    }
+  }
+
   private val siblings =
     scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
 

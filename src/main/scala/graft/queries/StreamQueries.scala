@@ -5,9 +5,12 @@ import java.nio.file.Files
 import graft.operators.Ticks
 import graft.serving.LivePipeline
 import graft.serving.LivePipeline.Stores
+import graft.sources.Compact
 import graft.streaming.{SeqTick, Streams, TickRow}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Driver-gate queries that EXECUTE the Structured Streaming layer — a real
@@ -28,6 +31,32 @@ import org.apache.spark.sql.types.StructType
   * hash-checkable against a batch oracle.
   */
 object StreamQueries {
+
+  /** Temp roots of this JVM's gate runs, stream stages and deployment
+    * replays, deleted at JVM exit — not earlier: a caller may read a gate's
+    * result lazily after the gate function returns, a later e2e tail gate
+    * may read a superseded replay root, and the stage caches serve the
+    * whole JVM. They sit under `java.io.tmpdir`, which build.sbt points at
+    * a RAM-backed tmpfs where the host has one. */
+  private val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  sys.addShutdownHook {
+    roots.forEach { r =>
+      try {
+        val p = java.nio.file.Paths.get(r)
+        if (Files.exists(p))
+          Files.walk(p)
+            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+            .forEach(f => Files.deleteIfExists(f))
+      } catch { case _: Throwable => () }
+    }
+  }
+
+  /** A fresh temp directory `<prefix><random>`, reaped at JVM exit. */
+  private def tempRoot(prefix: String): String = {
+    val root = Files.createTempDirectory(prefix).toString
+    roots.add(root)
+    root
+  }
 
   /** The events fixture staged as a bounded MULTI-BATCH file stream: rows
     * re-written as `chunks` range-partitioned files (ascending (ts,
@@ -70,7 +99,7 @@ object StreamQueries {
     s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val batch = s.read.parquet(s"$d/events.parquet")
     val stagePath = stageCache.getOrElseUpdate((d, chunks), {
-      val stage = Files.createTempDirectory("graft-stream-src-").toString
+      val stage = tempRoot("graft-stream-src-")
       stageChunks(stage, batch, chunks,
         Seq(col("ts"), col("event_id")), Seq(col("ts"), col("event_id")))
       stage
@@ -83,20 +112,13 @@ object StreamQueries {
     graft.sources.Tables.normalizeEventTime(stream)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered:
-    * each micro-batch checkpoints one state file per stateful-operator
-    * partition, so 32 partitions × several batches × stateful ops is pure
-    * small-file overhead at this event volume. State partition count is
-    * frozen into each query's own fresh checkpoint, so this cannot
-    * invalidate any other query. */
-  private def withStreamShuffle[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   private def tickStream(s: SparkSession, d: String): DataFrame =
     Ticks.valid(Ticks.fromEvents(eventsStream(s, d)))
+
+  /** A tick stream as the keyed folds' [[SeqTick]] rows. */
+  private def seqTicks(ticks: DataFrame): Dataset[SeqTick] =
+    ticks.select(col("pair"), col("time"), col("seq"), col("bid"))
+      .as[SeqTick](Encoders.product[SeqTick])
 
   /** The documents fixture as a bounded 5-chunk file stream (same staging
     * discipline as [[eventsStream]]): four ascending doc_id ranges plus a
@@ -114,12 +136,12 @@ object StreamQueries {
     val batch = graft.sources.Tables.documents(s, d)
       .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
     val stagePath = docStageCache.getOrElseUpdate((d, chunks), {
-      val stage = Files.createTempDirectory("graft-docstream-src-").toString
+      val stage = tempRoot("graft-docstream-src-")
       val n = stageChunks(stage, batch, chunks,
         Seq(col("doc_id")), Seq(col("doc_id")))
       val redeliver = batch.orderBy(col("doc_id")).limit(100)
         .withColumn("ts", col("ts") + expr("INTERVAL 600 SECONDS"))
-      val redir = s"$stage-redeliver"
+      val redir = tempRoot("graft-docstream-redeliver-")
       redeliver.coalesce(1).write.mode("overwrite").parquet(redir)
       val rpart = new java.io.File(redir).listFiles()
         .find(_.getName.startsWith("part-")).get
@@ -147,7 +169,7 @@ object StreamQueries {
     val batch = graft.operators.Flows.candleFlow(
       TradingQueries.ticks(s, d), new graft.Config(Map.empty))
     val stagePath = candleStageCache.getOrElseUpdate((d, chunks), {
-      val stage = Files.createTempDirectory("graft-candlestream-src-").toString
+      val stage = tempRoot("graft-candlestream-src-")
       stageChunks(stage, batch, chunks, Seq(col("time")),
         Seq(col("time"), col("pair"), col("timeframe")))
       stage
@@ -165,14 +187,54 @@ object StreamQueries {
   val telemetry =
     scala.collection.concurrent.TrieMap.empty[String, Map[String, Long]]
 
-  private def awaitAndRecord(name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def awaitAndRecord(name: String, q: StreamingQuery): Unit = {
     q.awaitTermination()
     val last = q.recentProgress.lastOption
     telemetry(name) = Map(
       "batches" -> q.recentProgress.length.toLong,
       "state_rows" -> last.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L),
       "state_mem_bytes" -> last.map(_.stateOperators.map(_.memoryUsedBytes).sum).getOrElse(0L))
+  }
+
+  /** One invocation of the gate registered as `name` (its telemetry key),
+    * on session `s`. */
+  private final case class Gate(name: String, s: SparkSession) {
+
+    /** The one gate runner: `start(root)` on a fresh temp root
+      * `graft-<tag>-` (`tag` = the name up to its first `_`; reaped at JVM
+      * exit), run to AvailableNow completion and recorded in
+      * [[telemetry]]. The query starts with `partitions` state partitions
+      * (0: the session's) and, when `rocksDb`, the RocksDB state store
+      * that `transformWithState` requires; both settings are scoped to the
+      * start. Each micro-batch checkpoints one state file per stateful
+      * partition, so the session's one-per-core count is small-file
+      * overhead at the fixtures' volume; the count is frozen into the
+      * query's own fresh checkpoint, so it cannot affect another query.
+      * Returns the root for the gate's read-back. */
+    def run(partitions: Int, rocksDb: Boolean = false)(
+        start: String => StreamingQuery): String = {
+      val root = tempRoot(s"graft-${name.takeWhile(_ != '_')}-")
+      val conf =
+        (if (partitions > 0) Seq(SQLConf.SHUFFLE_PARTITIONS.key -> partitions.toString)
+         else Nil) ++
+        (if (rocksDb) Seq(SQLConf.STATE_STORE_PROVIDER_CLASS.key ->
+           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+         else Nil)
+      graft.Session.withConf(s, conf)(awaitAndRecord(name, start(root)))
+      root
+    }
+
+    /** [[run]] for a gate whose stream is `out`, appended by the native
+      * parquet sink; returns the sink read back. */
+    def sink(partitions: Int, rocksDb: Boolean = false)(out: => DataFrame): DataFrame = {
+      val root = run(partitions, rocksDb)(root => out.writeStream.format("parquet")
+        .option("path", s"$root/sink")
+        .option("checkpointLocation", s"$root/ckpt")
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start())
+      s.read.parquet(s"$root/sink")
+    }
   }
 
   /** ONE deployment replay per (session, fixture dir) serving every e2e
@@ -185,20 +247,6 @@ object StreamQueries {
     * invoked standalone. */
   private object E2eReplay {
     private val cache = scala.collection.concurrent.TrieMap.empty[String, String]
-    // replay temp roots live for the whole session (a later tail gate may
-    // read a superseded root it captured earlier) — reap them at JVM exit
-    private val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    sys.addShutdownHook {
-      roots.forEach { r =>
-        try {
-          val p = java.nio.file.Paths.get(r)
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p)
-              .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }
-      }
-    }
 
     /** Always replays (the honest timed path); refreshes the cache.
       * `gate` attributes the run's stream telemetry to the invoking
@@ -233,8 +281,7 @@ object StreamQueries {
         Seq("click", "view", "signup").map(p =>
           graft.serving.PathConfig(p, s"/ws/ticker_$p")), heartbeatMillis = 60000L)
       val srvPort = srv.start()
-      val root = Files.createTempDirectory("graft-e2e-").toString
-      roots.add(root)
+      val root = tempRoot("graft-e2e-")
       val sub = new graft.sources.WebSocketClient("127.0.0.1", srvPort, "/ws/ticker_click")
       try {
         sub.connect()
@@ -265,7 +312,7 @@ object StreamQueries {
   /** A live deployment store read with its declared schema behind the
     * store's existence check; an absent store reads as empty. */
   private def liveStore(s: SparkSession, path: String, schema: StructType): DataFrame =
-    LivePipeline.scanStore(s, path, schema).getOrElse(empty(s, schema))
+    Compact.scanStore(s, path, schema).getOrElse(empty(s, schema))
 
   /** The open positions of a live ledger snapshot (none before the first
     * fold) as trade rows with NULL exit fields. */
@@ -277,7 +324,10 @@ object StreamQueries {
         lit(null).cast("timestamp").as("exit_time"),
         lit(null).cast("double").as("exit_price"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** A gate's query body: its [[Gate]] runner, the session, the fixture dir. */
+  private type GateFn = (Gate, SparkSession, String) => DataFrame
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, GateFn](
     // U4d (S1, the direct socket→engine path): the DSv2 `graft-websocket`
     // streaming source — a real RFC-6455 client inside a MicroBatchStream,
     // no file spool — driven against a wire-replay endpoint serving the
@@ -292,7 +342,7 @@ object StreamQueries {
     // (the tight 2-message version is proven in WebSocketSourceSpec, as
     // is WAL replay across a query kill). Fixture bound: ≤ pairs ×
     // window-seconds rows by the per-second dedup — require-guarded.
-    "u4d_socket_ingest" -> ((s, d) => {
+    "u4d_socket_ingest" -> ((g, s, d) => {
       val wireEnd = "2024-01-03 00:00:00"
       val msgs = graft.operators.Relay.toWireMessages(
           TradingQueries.ticks(s, d).filter(col("time") < lit(wireEnd)))
@@ -302,9 +352,9 @@ object StreamQueries {
         s"u4d replay fixture unexpectedly large: ${msgs.length}")
       val server = new graft.serving.WireReplayServer(msgs, dropEvery = 2500)
       val port = server.start()
-      val tmp = Files.createTempDirectory("graft-u4d-").toString
-      try {
-        val lines = s.readStream.format("graft-websocket")
+      // stateless parse: the session's partition count is kept
+      try g.sink(0) {
+        Ticks.fromWireJson(s.readStream.format("graft-websocket")
           .option("host", "localhost").option("port", port.toString)
           .option("path", "/ws/public/v1")
           .option("subscribe",
@@ -312,19 +362,10 @@ object StreamQueries {
           .option("maxMessages", msgs.length.toString)
           .option("backoffMs", "25")
           .option("maxReconnects", (msgs.length / 2500 + 5).toString)
-          .load()
-        awaitAndRecord("u4d_socket_ingest",
-          Ticks.fromWireJson(lines)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      } finally server.stop()
-      s.read.parquet(s"$tmp/sink")
-        .select(col("pair"), unix_millis(col("time")).as("time_ms"),
-          col("bid"), col("ask"))
+          .load())
+      }.select(col("pair"), unix_millis(col("time")).as("time_ms"),
+        col("bid"), col("ask"))
+      finally server.stop()
     }),
 
     // E2E (the reference's whole deployment, one living chain): wire JSON
@@ -340,8 +381,8 @@ object StreamQueries {
     // cache; the signal/trade/stopped tails are independent ORACLE CHECKS
     // against the same run's stores (E2eReplay.sharedRoot — standalone
     // invocations replay for themselves).
-    "e2e_live_pipeline" -> ((s, d) => {
-      val root = E2eReplay.replay(s, d, "e2e_live_pipeline")
+    "e2e_live_pipeline" -> ((g, s, d) => {
+      val root = E2eReplay.replay(s, d, g.name)
       s.read.parquet(s"$root/grid_facts")
         .select(col("indicator"), col("pair"), col("timeframe"),
           unix_timestamp(col("time")).as("time_s"), col("period"),
@@ -353,8 +394,8 @@ object StreamQueries {
     // signal store (one replay, independent oracle per tail table).
     // Oracle: the w1 cross composition over the live-cutoff final bars,
     // per timeframe.
-    "e2e_live_signals" -> ((s, d) => {
-      val st = Stores(E2eReplay.sharedRoot(s, d, "e2e_live_signals"))
+    "e2e_live_signals" -> ((g, s, d) => {
+      val st = Stores(E2eReplay.sharedRoot(s, d, g.name))
       // a window with no crosses writes no store (sub-gate SFs): the
       // oracle is empty there too
       val out = liveStore(s, st.signals, Stores.SignalSchema)
@@ -372,8 +413,8 @@ object StreamQueries {
     // per-key state, first-write-wins closed-trade appends). Output:
     // closed trades from the store plus the open positions from the
     // state snapshot. Oracle: the f6b pairing over the live crosses.
-    "e2e_live_trades" -> ((s, d) => {
-      val st = Stores(E2eReplay.sharedRoot(s, d, "e2e_live_trades"))
+    "e2e_live_trades" -> ((g, s, d) => {
+      val st = Stores(E2eReplay.sharedRoot(s, d, g.name))
       val closed = liveStore(s, st.trades, Stores.TradeSchema)
         .select("pair", "timeframe", "trade_no", "entry_time",
           "entry_price", "exit_time", "exit_price", "pnl")
@@ -394,8 +435,8 @@ object StreamQueries {
     // store frontier. Same shared replay; oracle = the f6f recursive
     // state machine over the live-cutoff final bars + crosses, per
     // timeframe.
-    "e2e_live_trades_stopped" -> ((s, d) => {
-      val st = Stores(E2eReplay.sharedRoot(s, d, "e2e_live_trades_stopped"))
+    "e2e_live_trades_stopped" -> ((g, s, d) => {
+      val st = Stores(E2eReplay.sharedRoot(s, d, g.name))
       val closed = liveStore(s, st.tradesStopped, Stores.StoppedTradeSchema)
         .select("pair", "timeframe", "trade_no", "entry_time",
           "entry_price", "exit_time", "exit_price", "reason", "pnl")
@@ -420,14 +461,11 @@ object StreamQueries {
     // row is in the EARLIEST batch that touches the group — per-batch
     // dedup keeps exactly it, and first-write-wins preserves it against
     // later batches' partial-group survivors.
-    "t4_relay_sink" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t4-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t4_relay_sink",
-          Streams.relayToParquet(tickStream(s, d), s"$tmp/sink", s"$tmp/ckpt",
-            keys = Seq("pair", "time"), perBatch = Ticks.dedupSecond))
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t4_relay_sink" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.relayToParquet(tickStream(s, d), s"$root/sink", s"$root/ckpt",
+          keys = Seq("pair", "time"), perBatch = Ticks.dedupSecond))
+      s.read.parquet(s"$root/sink")
         .select(col("pair"), unix_timestamp(col("time")).as("time_s"),
           col("bid"), col("ask"))
     }),
@@ -438,21 +476,10 @@ object StreamQueries {
     // in state at shutdown, and the oracle applies the same cutoff
     // (window end ≤ max event time − 1 minute). Open/close picked by the
     // (time, seq) total order, so any batch split yields the same candle.
-    "t2_ohlc_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t2-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t2_ohlc_stream", Streams.ohlc1mSeq(tickStream(s, d))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t2_ohlc_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.ohlc1mSeq(tickStream(s, d)))
         .select(col("pair"), unix_timestamp(col("time")).as("time_s"),
-          col("open"), col("high"), col("low"), col("close"))
-    }),
+          col("open"), col("high"), col("low"), col("close"))),
 
     // T24 (derived-timeframe bars): 1m→5m resample as TWO chained streaming
     // window aggregations in one query (multiple stateful operators, one
@@ -461,22 +488,10 @@ object StreamQueries {
     // inner 1m window has been finalized upstream in the same pipeline; the
     // oracle resamples the complete 1m set and applies the same cutoff
     // (5m end ≤ max truncated event time − 1 minute).
-    "t24_resample_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t24-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t24_resample_stream",
-          Streams.resampleStream(tickStream(s, d))
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t24_resample_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.resampleStream(tickStream(s, d)))
         .select(col("pair"), unix_timestamp(col("time")).as("time_s"),
-          col("open"), col("high"), col("low"), col("close"))
-    }),
+          col("open"), col("high"), col("low"), col("close"))),
 
     // Streaming sessionization: session_window gap sessions accumulating
     // ACROSS the four micro-batches (session-state merge), append-emitted
@@ -484,25 +499,13 @@ object StreamQueries {
     // same cutoff (last event + gap ≤ max event time − watermark delay).
     // Event times truncate to seconds so the watermark arithmetic is exact;
     // total_value decimal-sums on both sides (merge-order-insensitive).
-    "t6_session_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t6-").toString
-      withStreamShuffle(s, 8) {
-        val ev = eventsStream(s, d)
+    "t6_session_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.sessionizeStream(eventsStream(s, d)
           .select(col("user_id"), date_trunc("second", col("ts")).as("ts"),
-            col("value"))
-        awaitAndRecord("t6_session_stream", Streams.sessionizeStream(ev)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+            col("value"))))
         .select(col("user_id"),
           unix_timestamp(col("session_start")).as("start_s"),
-          col("n_events"), round(col("total_value"), 6).as("total_value"))
-    }),
+          col("n_events"), round(col("total_value"), 6).as("total_value"))),
 
     // T7 (stream-stream join): two independent watermarked streams joined
     // on their 1-minute event-time window — every (signup, error) quote
@@ -510,32 +513,19 @@ object StreamQueries {
     // is the complete batch-join set for this bounded replay (see
     // Streams.windowJoin's eviction argument), so the read-back per-minute
     // aggregation is split-independent and hash-checkable.
-    "t7_stream_join" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t7-").toString
+    "t7_stream_join" -> ((g, s, d) =>
       // 2 state partitions, not the other streaming queries' 8: a join
       // keeps per-partition state on BOTH sides, so state-file commits
       // scale 2× per partition and dominate at this volume (measured
       // min-of-2 at sf0.1: 8 -> 6.7 s, 4 -> 4.9 s, 2 -> 4.3 s)
-      withStreamShuffle(s, 2) {
-        val l = tickStream(s, d).filter(col("pair") === "signup")
-          .select(col("time"), col("bid"))
-        val r = tickStream(s, d).filter(col("pair") === "error")
-          .select(col("time"), col("bid"))
-        awaitAndRecord("t7_stream_join", Streams.windowJoin(l, r)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+      g.sink(2)(Streams.windowJoin(
+          tickStream(s, d).filter(col("pair") === "signup").select(col("time"), col("bid")),
+          tickStream(s, d).filter(col("pair") === "error").select(col("time"), col("bid"))))
         .groupBy(col("time"))
         .agg(count(lit(1)).as("n_pairs"),
           max(col("l_bid")).as("max_l_bid"), max(col("r_bid")).as("max_r_bid"))
         .select(unix_timestamp(col("time")).as("minute_s"),
-          col("n_pairs"), col("max_l_bid"), col("max_r_bid"))
-    }),
+          col("n_pairs"), col("max_l_bid"), col("max_r_bid"))),
 
     // T17 (streaming corpus-ingest dedup): the LLM layer's L1 exact dedup
     // as a bounded-state streaming guard — re-crawled/re-delivered docs
@@ -544,21 +534,9 @@ object StreamQueries {
     // which copy's payload survives inside a batch is arrival-order-
     // dependent, exactly the t11 contract (payload determinism is the t4
     // relay's job downstream).
-    "t17_doc_ingest_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t17-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t17_doc_ingest_stream",
-          Streams.docIngestDedup(docStream(s, d))
-            .select(col("content_hash"))
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink").select(col("content_hash"))
-    }),
+    "t17_doc_ingest_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.docIngestDedup(docStream(s, d)).select(col("content_hash")))
+        .select(col("content_hash"))),
 
     // T25 (streaming L60): the ingest-time dedup guard — each arriving doc
     // is screened against everything seen before it (exact + near-dup +
@@ -567,15 +545,12 @@ object StreamQueries {
     // (id-ordered arrival makes sequential seen-wins ≡ pairwise
     // lower-id-wins). The redelivered tail file re-sends docs 0-99: every
     // one must self-reject against the seen store.
-    "t25_ingest_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t25-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t25_ingest_stream",
-          Streams.ingestToParquet(
-            docStream(s, d).select("doc_id", "text", "lang", "source"),
-            s"$tmp/seen", s"$tmp/accepted", s"$tmp/ckpt"))
-      }
-      s.read.parquet(s"$tmp/accepted").select("doc_id", "lang", "source")
+    "t25_ingest_stream" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.ingestToParquet(
+          docStream(s, d).select("doc_id", "text", "lang", "source"),
+          s"$root/seen", s"$root/accepted", s"$root/ckpt"))
+      s.read.parquet(s"$root/accepted").select("doc_id", "lang", "source")
     }),
 
     // T26 (streaming L61): the KMV sketch ledger — each micro-batch appends
@@ -584,17 +559,14 @@ object StreamQueries {
     // associative/commutative/idempotent), so the final pair matrix reuses
     // llm_source_sketch's oracle verbatim. The redelivered docs-0-99 file
     // appends a duplicate sketch that the merge must absorb.
-    "t26_sketch_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t26-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t26_sketch_stream",
-          Streams.sketchStream(
-            docStream(s, d).select("doc_id", "text", "source"),
-            s"$tmp/ledger", s"$tmp/ckpt", compactEvery = 2))
-      }
+    "t26_sketch_stream" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.sketchStream(
+          docStream(s, d).select("doc_id", "text", "source"),
+          s"$root/ledger", s"$root/ckpt", compactEvery = 2))
       graft.operators.Sketches.kmvMatrix(
         graft.operators.Sketches.mergeSketches(
-          s.read.parquet(s"$tmp/ledger"), k = 256), k = 256)
+          s.read.parquet(s"$root/ledger"), k = 256), k = 256)
     }),
 
     // T27 (streaming L64): the vocabulary-growth ledger — each micro-batch
@@ -603,16 +575,13 @@ object StreamQueries {
     // associative/commutative/idempotent), so the gate reuses
     // llm_heaps_curve's oracle verbatim. The redelivered docs-0-99 file
     // appends duplicate partials the min roll-up absorbs.
-    "t27_heaps_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t27-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t27_heaps_stream",
-          Streams.heapsStream(
-            docStream(s, d).select("doc_id", "text"),
-            s"$tmp/ledger", s"$tmp/ckpt", compactEvery = 2))
-      }
+    "t27_heaps_stream" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.heapsStream(
+          docStream(s, d).select("doc_id", "text"),
+          s"$root/ledger", s"$root/ckpt", compactEvery = 2))
       graft.operators.TextAnalysis.heapsCurveFromFirstOcc(
-        s.read.parquet(s"$tmp/ledger")
+        s.read.parquet(s"$root/ledger")
           .groupBy(col("tok")).agg(min(col("first_doc")).as("first_doc")),
         step = 1L)
     }),
@@ -623,16 +592,13 @@ object StreamQueries {
     // out by the seen store (else n_docs over-counts by 100), and the
     // batch_id-keyed ledger dedup guards batch replays. Converged roll-up
     // ≡ the one-shot batch lengthBuckets — oracle reused verbatim.
-    "t28_length_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t28-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t28_length_stream",
-          Streams.lengthStream(
-            docStream(s, d).select("doc_id", "text"),
-            s"$tmp/seen", s"$tmp/ledger", s"$tmp/ckpt",
-            step = 32, maxLen = 512, compactEvery = 2))
-      }
-      Streams.rollupLengthLedger(s.read.parquet(s"$tmp/ledger"))
+    "t28_length_stream" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.lengthStream(
+          docStream(s, d).select("doc_id", "text"),
+          s"$root/seen", s"$root/ledger", s"$root/ckpt",
+          step = 32, maxLen = 512, compactEvery = 2))
+      Streams.rollupLengthLedger(s.read.parquet(s"$root/ledger"))
     }),
 
     // T30 (streaming L69): the boilerplate segment ledger — per-batch
@@ -640,16 +606,13 @@ object StreamQueries {
     // distinct-doc df and scrubs, ≡ the one-shot batch boilerplateScrub
     // (segment rows are set data: the re-sent docs 0-99 and any replayed
     // append are absorbed by distinct). Oracle reused verbatim.
-    "t30_boilerplate_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t30-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t30_boilerplate_stream",
-          Streams.boilerplateStream(
-            docStream(s, d).select("doc_id", "text"),
-            s"$tmp/ledger", s"$tmp/ckpt", span = 10, compactEvery = 2))
-      }
+    "t30_boilerplate_stream" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.boilerplateStream(
+          docStream(s, d).select("doc_id", "text"),
+          s"$root/ledger", s"$root/ckpt", span = 10, compactEvery = 2))
       graft.operators.Dedup.boilerplateFromSegments(
-        s.read.parquet(s"$tmp/ledger"), minDf = 3)
+        s.read.parquet(s"$root/ledger"), minDf = 3)
     }),
 
     // T32 (streaming L78): unigram-LM token accounting under a FROZEN
@@ -658,18 +621,15 @@ object StreamQueries {
     // under it; per-doc rows are pure functions of the text, so the
     // re-sent docs 0-99 and any crash replay are absorbed by distinct.
     // Converged read ≡ the one-shot Unigram.encode — oracle verbatim.
-    "t32_unigram_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t32-").toString
+    "t32_unigram_stream" -> ((g, s, d) => {
       val model = graft.operators.Unigram.train(
         graft.sources.Tables.documents(s, d)
           .repartition(s.sparkContext.defaultParallelism, col("doc_id")),
         topV = 120, maxPiece = 6, keepV = 15).localCheckpoint(true)
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t32_unigram_stream",
-          Streams.unigramEncodeStream(docStream(s, d).select("doc_id", "text"),
-            model, s"$tmp/ledger", s"$tmp/ckpt", compactEvery = 2))
-      }
-      s.read.parquet(s"$tmp/ledger").distinct()
+      val root = g.run(8)(root =>
+        Streams.unigramEncodeStream(docStream(s, d).select("doc_id", "text"),
+          model, s"$root/ledger", s"$root/ckpt", compactEvery = 2))
+      s.read.parquet(s"$root/ledger").distinct()
     }),
 
     // T33 (streaming L79): byte-level BPE encode under FROZEN rules
@@ -678,19 +638,16 @@ object StreamQueries {
     // pure functions of the text, so redelivered docs 0-99 and crash
     // replays absorb by distinct. Converged read ≡ the one-shot
     // bpeEncodeBytes — oracle verbatim.
-    "t33_bpe_bytes_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t33-").toString
+    "t33_bpe_bytes_stream" -> ((g, s, d) => {
       val rules = graft.operators.TextAnalysis.bpeTrain(
         graft.sources.Tables.documents(s, d)
           .filter(col("lang") === "en")
           .repartition(s.sparkContext.defaultParallelism, col("doc_id")),
         k = 8, byteLevel = true)._2
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t33_bpe_bytes_stream",
-          Streams.bpeBytesEncodeStream(docStream(s, d).select("doc_id", "text"),
-            rules, s"$tmp/ledger", s"$tmp/ckpt", compactEvery = 2))
-      }
-      s.read.parquet(s"$tmp/ledger").distinct()
+      val root = g.run(8)(root =>
+        Streams.bpeBytesEncodeStream(docStream(s, d).select("doc_id", "text"),
+          rules, s"$root/ledger", s"$root/ckpt", compactEvery = 2))
+      s.read.parquet(s"$root/ledger").distinct()
     }),
 
     // T31 (streaming L30/L60): incremental ExactSubstr live — each batch
@@ -699,16 +656,13 @@ object StreamQueries {
     // re-delivered doc must not re-scrub against a larger index), and
     // batch_id-tagged grams make crash replays self-excluding. Converged
     // output ≡ one-shot dedupSubstr — oracle reused verbatim.
-    "t31_substr_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t31-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t31_substr_stream",
-          Streams.substrStream(
-            docStream(s, d).select("doc_id", "text"),
-            s"$tmp/seen", s"$tmp/grams", s"$tmp/out", s"$tmp/ckpt",
-            minRun = 10, compactEvery = 2))
-      }
-      s.read.parquet(s"$tmp/out").distinct()
+    "t31_substr_stream" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.substrStream(
+          docStream(s, d).select("doc_id", "text"),
+          s"$root/seen", s"$root/grams", s"$root/out", s"$root/ckpt",
+          minRun = 10, compactEvery = 2))
+      s.read.parquet(s"$root/out").distinct()
     }),
 
     // T16 (streaming VWAP): the size-weighted w11 aggregation as a
@@ -717,27 +671,15 @@ object StreamQueries {
     // watermark passes their end and the oracle applies the same cutoff.
     // Sizes ride the JSON payload exactly as in the batch twin; event
     // times truncate to the second so the cutoff arithmetic is exact.
-    "t16_vwap_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t16-").toString
+    "t16_vwap_stream" -> ((g, s, d) =>
       // 2 state partitions (swept isolated min-of-3: 8 -> 3.92 s,
       // 2 -> 3.34 s): one windowed-agg state op over (pair, hour) keys —
       // state-file commits, not data volume, dominate at this fixture size
-      withStreamShuffle(s, 2) {
-        val t = Ticks.withMid(Ticks.valid(
-          Ticks.fromEventsWithSize(eventsStream(s, d))))
-          .withColumn("time", date_trunc("second", col("time")))
-        awaitAndRecord("t16_vwap_stream", Streams.vwapStream(t)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+      g.sink(2)(Streams.vwapStream(
+          Ticks.withMid(Ticks.valid(Ticks.fromEventsWithSize(eventsStream(s, d))))
+            .withColumn("time", date_trunc("second", col("time")))))
         .select(col("pair"), unix_timestamp(col("time")).as("time_s"),
-          round(col("vwap"), 6).as("vwap"), col("qty"))
-    }),
+          round(col("vwap"), 6).as("vwap"), col("qty"))),
 
     // T11 (bounded-state streaming dedup): t4's first-per-second dedup
     // through `dropDuplicatesWithinWatermark` — state expires with the
@@ -751,21 +693,9 @@ object StreamQueries {
     // hash — t4 is the payload-deterministic dedup (explicit (time, seq)
     // tie-break in its per-batch stage). Dedup emits rows immediately, so
     // no shutdown cutoff applies.
-    "t11_dedup_bounded" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t11-").toString
-      withStreamShuffle(s, 8) {
-        awaitAndRecord("t11_dedup_bounded",
-          Streams.dedupTicksBounded(tickStream(s, d))
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
-        .select(col("pair"), unix_timestamp(col("time")).as("time_s"))
-    }),
+    "t11_dedup_bounded" -> ((g, s, d) =>
+      g.sink(8)(Streams.dedupTicksBounded(tickStream(s, d)))
+        .select(col("pair"), unix_timestamp(col("time")).as("time_s"))),
 
     // T12 (stream-static ANTI-join): incremental ingest against an
     // existing warehouse — the fixture's first half (by integer-midpoint
@@ -774,8 +704,7 @@ object StreamQueries {
     // key is new. Stateless per-row, so the 4-batch split can't affect
     // the emitted set; every surviving VALID tick is emitted (including
     // several in one new second — the warehouse filter is not a dedup).
-    "t12_stream_antijoin" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t12-").toString
+    "t12_stream_antijoin" -> ((g, s, d) => {
       val keys = TradingQueries.ticks(s, d).select(col("pair"), col("time"))
       val mm = keys.agg(min(unix_timestamp(col("time"))).as("mn"),
         max(unix_timestamp(col("time"))).as("mx"))
@@ -787,19 +716,10 @@ object StreamQueries {
         .filter(unix_timestamp(col("time")) <= expr("mn + (mx - mn) div 2"))
         .select(col("pair"), col("time").as("sec"))
         .cache()
-      try withStreamShuffle(s, 8) {
-        awaitAndRecord("t12_stream_antijoin",
-          Streams.antiJoinStatic(tickStream(s, d), existing)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      } finally existing.unpersist()
-      s.read.parquet(s"$tmp/sink")
+      try g.sink(8)(Streams.antiJoinStatic(tickStream(s, d), existing))
         .select(col("pair"), unix_micros(col("time")).as("time_us"),
           col("bid"), col("ask"), col("seq"))
+      finally existing.unpersist()
     }),
 
     // T10 (stream-stream OUTER join): the left-outer variant of t7 —
@@ -812,28 +732,15 @@ object StreamQueries {
     // (min of the two sides' max event time − delay) passed its window
     // end — unexpired buffered windows emit nothing at shutdown, in both
     // engines' restatements.
-    "t10_stream_outer_join" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t10-").toString
-      withStreamShuffle(s, 2) { // dual-sided state, like t7
-        val l = tickStream(s, d).filter(col("pair") === "signup")
-          .select(col("time"), col("bid"))
-        val r = tickStream(s, d).filter(col("pair") === "error")
-          .select(col("time"), col("bid"))
-        awaitAndRecord("t10_stream_outer_join", Streams.windowJoinOuter(l, r)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t10_stream_outer_join" -> ((g, s, d) =>
+      g.sink(2)(Streams.windowJoinOuter( // dual-sided state, like t7
+          tickStream(s, d).filter(col("pair") === "signup").select(col("time"), col("bid")),
+          tickStream(s, d).filter(col("pair") === "error").select(col("time"), col("bid"))))
         .groupBy(col("time"))
         .agg(count(lit(1)).as("n_rows"), count(col("r_bid")).as("n_matched"),
           max(col("l_bid")).as("max_l_bid"))
         .select(unix_timestamp(col("time")).as("minute_s"),
-          col("n_rows"), col("n_matched"), col("max_l_bid"))
-    }),
+          col("n_rows"), col("n_matched"), col("max_l_bid"))),
 
     // T8 (keyed custom state): streaming EMA-14 over every valid tick via
     // flatMapGroupsWithState — 3-number state per pair folded across the
@@ -841,27 +748,13 @@ object StreamQueries {
     // (time, seq)-ascending ranges and the fold sorts within each batch,
     // so the double recurrence runs in exactly the batch order and the
     // result is bit-identical to the recursive-CTE oracle.
-    "t8_ema_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t8-").toString
-      import s.implicits._
+    "t8_ema_stream" -> ((g, s, d) =>
       // 8 state partitions, like t2/t6 and unlike t7's 2: single-sided
       // state (one store per partition) still gains from parallel commits
       // (measured min-of-2 at sf0.1: 8 -> 2.30 s, 2 -> 2.71 s)
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t8_ema_stream", Streams.emaStream(ticks, 14)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+      g.sink(8)(Streams.emaStream(seqTicks(tickStream(s, d)), 14).toDF())
         .select(col("pair"), unix_micros(col("time")).as("time_us"),
-          round(col("ema"), 6).as("ema"))
-    }),
+          round(col("ema"), 6).as("ema"))),
 
     // T18 (streaming strategy): golden/dead-cross detection as LIVE keyed
     // state — the reference's strategy flow with the batch per-bar
@@ -869,25 +762,10 @@ object StreamQueries {
     // Streams.crossSignalStream). Append-mode cutoff: the open minute at
     // shutdown never finalizes, so the oracle stops strictly before each
     // pair's max tick minute.
-    "t18_signal_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t18-").toString
-      import s.implicits._
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t18_signal_stream",
-          Streams.crossSignalStream(ticks, 14, 28)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t18_signal_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.crossSignalStream(seqTicks(tickStream(s, d)), 14, 28).toDF())
         .select(col("pair"), unix_timestamp(col("time")).as("time_s"),
-          col("event_type"), round(col("price"), 6).as("price"), col("period"))
-    }),
+          col("event_type"), round(col("price"), 6).as("price"), col("period"))),
 
     // T19 (the whole pipeline live): ticks → dedup → candles → SMA ring →
     // cross → position state → CLOSED-trade ledger, one keyed fold (see
@@ -895,101 +773,90 @@ object StreamQueries {
     // candle minutes strictly before each pair's max tick minute finalize,
     // so the oracle pairs crosses within that prefix; the open position at
     // shutdown is state, not output.
-    "t19_trade_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t19-").toString
-      import s.implicits._
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t19_trade_stream",
-          Streams.tradeStream(ticks, 14, 28)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t19_trade_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.tradeStream(seqTicks(tickStream(s, d)), 14, 28).toDF())
         .select(col("pair"), col("trade_no"),
           unix_timestamp(col("entry_time")).as("entry_s"),
           round(col("entry_price"), 6).as("entry_price"),
           unix_timestamp(col("exit_time")).as("exit_s"),
           round(col("exit_price"), 6).as("exit_price"),
-          round(col("pnl"), 6).as("pnl"))
-    }),
+          round(col("pnl"), 6).as("pnl"))),
 
     // T22 (streaming A/D line): per-minute candling + an exact decimal
     // running money-flow sum — emitted per finalized minute, so the batch
     // u31 twin over the per-pair minute-cutoff prefix is bit-equal
-    "t22_adline_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t22-").toString
-      import s.implicits._
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t22_adline_stream",
-          Streams.adLineStream(ticks)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t22_adline_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.adLineStream(seqTicks(tickStream(s, d))).toDF())
         .select(col("pair"), unix_timestamp(col("time")).as("time_s"),
           round(col("close"), 6).as("close"), col("vol"),
-          round(col("ad"), 6).as("ad"))
-    }),
+          round(col("ad"), 6).as("ad"))),
 
     // T20 (tick-grain Renko): the live movement chart as keyed state —
     // per-row emission like t8/t15 (no cutoff), integer reference carry,
     // bit-exact vs the tick-series recursive CTE.
-    "t20_renko_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t20-").toString
-      import s.implicits._
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t20_renko_stream",
-          Streams.renkoStream(ticks, brick = 50.0)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t20_renko_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.renkoStream(seqTicks(tickStream(s, d)), brick = 50.0).toDF())
         .select(col("pair"), unix_micros(col("time")).as("time_us"),
           col("brick_no"), col("dir"), round(col("open"), 6).as("open"),
-          round(col("close"), 6).as("close"))
-    }),
+          round(col("close"), 6).as("close"))),
 
     // T21 (tick-grain ZigZag): live swing pivots as keyed state — a
     // confirmed pivot never revises, so append mode needs NO cutoff and
     // the output is bit-exact vs the batch recursion over the same ticks.
-    "t21_zigzag_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t21-").toString
-      import s.implicits._
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t21_zigzag_stream",
-          Streams.zigzagStream(ticks, rev = 0.1)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t21_zigzag_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.zigzagStream(seqTicks(tickStream(s, d)), rev = 0.1).toDF())
         .select(col("pair"), col("pivot_no"), unix_micros(col("time")).as("time_us"),
           col("kind"), round(col("price"), 6).as("price"),
-          unix_micros(col("confirm_time")).as("confirm_us"))
-    }),
+          unix_micros(col("confirm_time")).as("confirm_us"))),
+
+    // T14 (streaming cross-pair correlation): the stream twin of w12 and
+    // the TWELFTH streaming primitive — ONE keyed fold doing per-second
+    // dedup, per-minute candling, two-pair minute alignment, and the
+    // 30-diff rolling moments (exact decimal state; see
+    // Streams.corrStream). Append-mode cutoff: the open minute at
+    // shutdown never finalizes — the oracle excludes aligned minutes at
+    // or after the max tick's minute, like every other append gate.
+    "t14_corr_stream" -> ((g, s, d) =>
+      g.sink(1)( // one combo = one state partition
+          Streams.corrStream(seqTicks(tickStream(s, d)), "click", "view", 30).toDF())
+        .select(unix_timestamp(col("time")).as("time_s"), col("n"),
+          round(col("corr"), 6).as("corr"), round(col("beta"), 6).as("beta"))),
+
+    // T15 (tick-grain trailing stop): parabolic SAR as keyed streaming
+    // state — the THIRTEENTH streaming primitive, the live stop-loss line
+    // a serving layer polls per tick. Per-row emission like t8 (no
+    // watermark cutoff); bit-exact against the tick-series recursive CTE.
+    "t15_sar_stream" -> ((g, s, d) =>
+      g.sink(8)(Streams.sarStream(seqTicks(tickStream(s, d))).toDF())
+        .select(col("pair"), unix_micros(col("time")).as("time_us"),
+          round(col("value"), 6).as("value"))),
+
+    // T14b (all-combos streaming correlation matrix): the same fold as
+    // t14 keyed by combo — every tick fans out to its P-1 combos, the
+    // P·(P-1)/2 groups fold independently (the streaming twin of w13's
+    // combo-partitioned window). Per-combo append cutoff: each combo's
+    // open minute is the max tick minute among ITS two pairs.
+    "t14b_corr_stream_all" -> ((g, s, d) =>
+      g.sink(3)( // 3 combos
+          Streams.corrStreamAll(seqTicks(tickStream(s, d)),
+            Seq("click", "view", "signup"), 30).toDF())
+        .select(col("pair_a"), col("pair_b"),
+          unix_timestamp(col("time")).as("time_s"), col("n"),
+          round(col("corr"), 6).as("corr"), round(col("beta"), 6).as("beta"))),
+
+    // T23 (stale-feed detection, event-time TIMERS): gaps confirmed by a
+    // later tick emit inline; the TRAILING silence of each pair is
+    // declared by the global watermark through a registered timer — the
+    // emission a pure fold cannot produce. Threshold 600.5 s (non-round:
+    // no tie between a timer expiry and the final watermark on this
+    // fixture's clock). Oracle = ms-grain gap restatement + the trailing
+    // rule against the corpus max event time.
+    "t23_stale_stream" -> ((g, s, d) =>
+      g.sink(8, rocksDb = true)(Streams.staleStream(
+          seqTicks(tickStream(s, d).withWatermark("time", "0 seconds")),
+          thresholdMs = 600500L).toDF())
+        .select(col("pair"), unix_micros(col("last_time")).as("last_us"),
+          unix_micros(col("stale_at")).as("stale_us"))),
 
     // T13 (transformWithState): running peak + drawdown per pair on
     // Spark 4's arbitrary-state API — the ELEVENTH distinct streaming
@@ -999,141 +866,10 @@ object StreamQueries {
     // batch folds in (second, nanos, seq) order and chunks replay in
     // ascending time ranges, so every row's peak equals the batch
     // running-max window — the w7 risk metric, per tick, streaming.
-    // T14 (streaming cross-pair correlation): the stream twin of w12 and
-    // the TWELFTH streaming primitive — ONE keyed fold doing per-second
-    // dedup, per-minute candling, two-pair minute alignment, and the
-    // 30-diff rolling moments (exact decimal state; see
-    // Streams.corrStream). Append-mode cutoff: the open minute at
-    // shutdown never finalizes — the oracle excludes aligned minutes at
-    // or after the max tick's minute, like every other append gate.
-    "t14_corr_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t14-").toString
-      import s.implicits._
-      withStreamShuffle(s, 1) { // one combo = one state partition
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t14_corr_stream",
-          Streams.corrStream(ticks, "click", "view", 30)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
-        .select(unix_timestamp(col("time")).as("time_s"), col("n"),
-          round(col("corr"), 6).as("corr"), round(col("beta"), 6).as("beta"))
-    }),
-
-    // T15 (tick-grain trailing stop): parabolic SAR as keyed streaming
-    // state — the THIRTEENTH streaming primitive, the live stop-loss line
-    // a serving layer polls per tick. Per-row emission like t8 (no
-    // watermark cutoff); bit-exact against the tick-series recursive CTE.
-    "t15_sar_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t15-").toString
-      import s.implicits._
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t15_sar_stream",
-          Streams.sarStream(ticks)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
-        .select(col("pair"), unix_micros(col("time")).as("time_us"),
-          round(col("value"), 6).as("value"))
-    }),
-
-    // T14b (all-combos streaming correlation matrix): the same fold as
-    // t14 keyed by combo — every tick fans out to its P-1 combos, the
-    // P·(P-1)/2 groups fold independently (the streaming twin of w13's
-    // combo-partitioned window). Per-combo append cutoff: each combo's
-    // open minute is the max tick minute among ITS two pairs.
-    "t14b_corr_stream_all" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t14b-").toString
-      import s.implicits._
-      withStreamShuffle(s, 3) { // 3 combos
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t14b_corr_stream_all",
-          Streams.corrStreamAll(ticks, Seq("click", "view", "signup"), 30)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }
-      s.read.parquet(s"$tmp/sink")
-        .select(col("pair_a"), col("pair_b"),
-          unix_timestamp(col("time")).as("time_s"), col("n"),
-          round(col("corr"), 6).as("corr"), round(col("beta"), 6).as("beta"))
-    }),
-
-    // T23 (stale-feed detection, event-time TIMERS): gaps confirmed by a
-    // later tick emit inline; the TRAILING silence of each pair is
-    // declared by the global watermark through a registered timer — the
-    // emission a pure fold cannot produce. Threshold 600.5 s (non-round:
-    // no tie between a timer expiry and the final watermark on this
-    // fixture's clock). Oracle = ms-grain gap restatement + the trailing
-    // rule against the corpus max event time.
-    "t23_stale_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t23-").toString
-      import s.implicits._
-      val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .withWatermark("time", "0 seconds")
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t23_stale_stream",
-          Streams.staleStream(ticks, thresholdMs = 600500L)
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      } finally prevProvider match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      s.read.parquet(s"$tmp/sink")
-        .select(col("pair"), unix_micros(col("last_time")).as("last_us"),
-          unix_micros(col("stale_at")).as("stale_us"))
-    }),
-
-    "t13_twstate_drawdown" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t13-").toString
-      import s.implicits._
-      val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("seq"), col("bid")).as[SeqTick]
-        awaitAndRecord("t13_twstate_drawdown", Streams.drawdownStream(ticks)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      } finally prevProvider match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t13_twstate_drawdown" -> ((g, s, d) =>
+      g.sink(8, rocksDb = true)(Streams.drawdownStream(seqTicks(tickStream(s, d))).toDF())
         .select(col("pair"), unix_micros(col("time")).as("time_us"), col("seq"),
-          round(col("peak"), 6).as("peak"), round(col("dd"), 6).as("dd"))
-    }),
+          round(col("peak"), 6).as("peak"), round(col("dd"), 6).as("dd"))),
 
     // T29 (streaming fused grid): the reference's FULL default 45-combo
     // indicator grid as LIVE keyed state — per (pair, timeframe), the
@@ -1145,33 +881,15 @@ object StreamQueries {
     // batch and chunks replay in ascending time ranges, so the converged
     // fact set equals the one-shot batch grid for ANY batch split — the
     // oracle is f3c's, verbatim.
-    "t29_grid_stream" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t29-").toString
-      import s.implicits._
-      val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try withStreamShuffle(s, 8) {
-        val candles = candleStream(s, d)
-          .select(col("pair"), col("timeframe"), col("time"), col("close"))
-          .as[graft.operators.CloseRow]
-        awaitAndRecord("t29_grid_stream",
-          Streams.gridStream(candles, Seq("RSI", "SMA", "EMA"), Seq(14, 28, 56))
-            .writeStream.format("parquet")
-            .option("path", s"$tmp/sink")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      } finally prevProvider match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t29_grid_stream" -> ((g, s, d) =>
+      g.sink(8, rocksDb = true)(Streams.gridStream(
+          candleStream(s, d)
+            .select(col("pair"), col("timeframe"), col("time"), col("close"))
+            .as[graft.operators.CloseRow](Encoders.product[graft.operators.CloseRow]),
+          Seq("RSI", "SMA", "EMA"), Seq(14, 28, 56)).toDF())
         .select(col("indicator"), col("pair"), col("timeframe"),
           unix_timestamp(col("time")).as("time_s"), col("period"),
-          round(col("value"), 6).as("value"))
-    }),
+          round(col("value"), 6).as("value"))),
 
     // T9 (stream-static join): the live tick stream enriched with a
     // bounded static dim (pair → type_id, the j2 pattern) via broadcast
@@ -1180,8 +898,7 @@ object StreamQueries {
     // shape. The static side is planned once and broadcast to every
     // micro-batch; determinism: counts/maxes are merge-commutative and the
     // t2 watermark cutoff applies.
-    "t9_stream_enrich" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t9-").toString
+    "t9_stream_enrich" -> ((g, s, d) => {
       val pairs = graft.sources.Tables.events(s, d)
         .select(col("event_type").as("pair")).distinct()
         .orderBy(col("pair")).limit(10001).collect().map(_.getString(0))
@@ -1190,24 +907,14 @@ object StreamQueries {
       val dim = pairs.zipWithIndex.map { case (p, i) => (p, (i + 1).toLong) }
         .toSeq.toDF("pair", "type_id")
       // same sweep as t8: 8 -> 3.25 s, 2 -> 3.72 s (min-of-2, sf0.1)
-      withStreamShuffle(s, 8) {
-        val enriched = tickStream(s, d)
+      g.sink(8)(tickStream(s, d)
           .withColumn("time", date_trunc("second", col("time")))
           .withWatermark("time", "1 minute")
           .join(broadcast(dim), Seq("pair"))
-        awaitAndRecord("t9_stream_enrich", enriched
           .groupBy(col("type_id"), window(col("time"), "1 minute"))
           .agg(count(lit(1)).as("n_ticks"), max(col("bid")).as("max_bid"))
           .select(col("type_id"), col("window.start").as("time"),
-            col("n_ticks"), col("max_bid"))
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/sink")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start())
-      }
-      s.read.parquet(s"$tmp/sink")
+            col("n_ticks"), col("max_bid")))
         .select(col("type_id"), unix_timestamp(col("time")).as("time_s"),
           col("n_ticks"), col("max_bid"))
     }),
@@ -1216,22 +923,20 @@ object StreamQueries {
     // update-mode emissions appended to a log sink; the log's per-pair
     // (time, bid)-max equals the batch latest for any batch split or
     // redelivery (a max cannot be changed by duplicate appends).
-    "t5_latest_sink" -> ((s, d) => {
-      val tmp = Files.createTempDirectory("graft-t5-").toString
-      import s.implicits._
-      withStreamShuffle(s, 8) {
-        val ticks = tickStream(s, d)
-          .select(col("pair"), col("time"), col("bid"), col("ask")).as[TickRow]
-        awaitAndRecord("t5_latest_sink",
-          Streams.latestToParquet(ticks, s"$tmp/sink", s"$tmp/ckpt"))
-      }
-      s.read.parquet(s"$tmp/sink")
+    "t5_latest_sink" -> ((g, s, d) => {
+      val root = g.run(8)(root =>
+        Streams.latestToParquet(
+          tickStream(s, d).select(col("pair"), col("time"), col("bid"), col("ask"))
+            .as[TickRow](Encoders.product[TickRow]),
+          s"$root/sink", s"$root/ckpt"))
+      s.read.parquet(s"$root/sink")
         .groupBy(col("pair"))
         .agg(max_by(struct(col("time"), col("bid"), col("ask")),
           struct(col("time"), col("bid"))).as("l"))
         .select(col("pair"), unix_timestamp(col("l.time")).as("time_s"),
           col("l.bid").as("bid"), col("l.ask").as("ask"))
-    }))
+    })
+  ).map { case (name, f) => name -> ((s: SparkSession, d: String) => f(Gate(name, s), s, d)) }
 
   val oracleSql: Map[String, String] = Map(
     "t4_relay_sink" ->

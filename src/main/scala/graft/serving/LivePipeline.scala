@@ -256,7 +256,7 @@ object LivePipeline {
   private def readStoreBounded(spark: SparkSession, path: String, schema: StructType,
                                bounds: Seq[PairBound], strict: Boolean)
       : Option[DataFrame] = {
-    scanStore(spark, path, schema).map { raw =>
+    Compact.scanStore(spark, path, schema).map { raw =>
       if (bounds.isEmpty) return Some(raw.drop("dt", "t_s"))
       val exact = exactPred(bounds, strict)
       val closed = bounds.filter(_.exempt.isEmpty)
@@ -319,27 +319,10 @@ object LivePipeline {
     SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
     SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString)
 
-  /** `body` with [[BatchConf]] set on `spark`'s session conf; every prior
-    * value (or its absence) is restored afterwards, also when `body`
-    * throws. Scoped on the caller's session rather than a child session:
-    * listeners on `spark.streams` must keep seeing the query. */
-  private def withBatchConf(spark: SparkSession)(body: => Unit): Unit = {
-    val conf = spark.sessionState.conf
-    val prior = BatchConf.map { case (k, _) =>
-      k -> (if (conf.contains(k)) Some(conf.getConfString(k)) else None) }
-    try {
-      BatchConf.foreach { case (k, v) => conf.setConfString(k, v) }
-      body
-    } finally prior.foreach {
-      case (k, Some(v)) => conf.setConfString(k, v)
-      case (k, None) => conf.unsetConf(k)
-    }
-  }
-
   /** One poll of the reference's deployment loop (also driven directly by
     * the spec's kill/restart harness). `state` holds the snapshots across
     * the batches of one query; a fresh one reloads them from disk. Runs
-    * under [[BatchConf]]. */
+    * under [[BatchConf]], scoped by [[graft.Session.withConf]]. */
   def processBatch(batch: DataFrame, batchId: Long, stores: Stores,
                    server: TickerServer, indicators: Seq[String],
                    periods: Seq[Int], tfs: Seq[Timeframe],
@@ -347,7 +330,7 @@ object LivePipeline {
                    slPct: Double = 0.005, tpPct: Double = 0.01,
                    retainDays: Int = 0,
                    state: LiveState = new LiveState): Unit =
-    withBatchConf(batch.sparkSession) {
+    graft.Session.withConf(batch.sparkSession, BatchConf) {
       runBatch(batch, batchId, stores, server, indicators, periods, tfs,
         compactEvery, slPct, tpPct, retainDays, state)
     }
@@ -410,7 +393,7 @@ object LivePipeline {
     val wmRows: Seq[(String, String, java.sql.Timestamp)] = gridRows match {
       case Some(rows) =>
         rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getTimestamp(6))).distinct
-      case None => scanStore(spark, stores.candles, CandleSchema) match {
+      case None => Compact.scanStore(spark, stores.candles, CandleSchema) match {
         case Some(pc) => Incremental.watermarks(pc).collect().toSeq
           .map(r => (r.getString(0), r.getString(1), r.getTimestamp(2)))
         case None => Seq.empty
@@ -645,7 +628,7 @@ object LivePipeline {
     //    than `retainDays` behind the batch's own max tick date (the
     //    deployment's event clock — wall clock would mis-retire a replay)
     phase("compact")
-    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+    if (Compact.due(compactEvery, batchId)) {
       val allStores = Seq(stores.ticks, stores.candles, stores.gridFacts,
         stores.signals, stores.trades, stores.tradesStopped)
       allStores.foreach(Compact.compactStore(spark, _))
@@ -716,22 +699,12 @@ object LivePipeline {
   def latestStopTradeState(spark: SparkSession, stores: Stores): Option[DataFrame] =
     readLatestLedger(spark, stores.tradeStopState)
 
-  /** A store read with its declared schema; None = store absent (an HDFS
-    * `exists` answer — never a caught read error, so a bad filter built
-    * on the frame still throws). */
-  private[graft] def scanStore(spark: SparkSession, path: String,
-                               schema: StructType): Option[DataFrame] = {
-    val p = new Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(spark.read.schema(schema).parquet(path))
-  }
-
   /** Read a (pair, dt)-partitioned store, applying `pred` BEFORE dropping
     * the partition-only `dt` column so its literal dt conjuncts prune
     * partitions. None = store absent. */
   private def readStore(spark: SparkSession, path: String, schema: StructType,
                         pred: Column): Option[DataFrame] =
-    scanStore(spark, path, schema).map(_.filter(pred).drop("dt", "t_s"))
+    Compact.scanStore(spark, path, schema).map(_.filter(pred).drop("dt", "t_s"))
 
   /** First-write-wins append, partitioned by (pair, UTC date), carrying
     * the epoch-second BIGINT `t_s` the bounded reads prune row groups

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Small-file compaction — the housekeeping op every incremental sink needs
   * at scale: micro-batch appends (t4/t11/t12-style) and partitioned
@@ -20,6 +21,24 @@ import org.apache.spark.sql.functions._
   * rewrite in place over its own input.
   */
 object Compact {
+
+  /** A store read with its declared schema — the schema of the frame that
+    * writes it; None = store absent (an HDFS `exists` answer — never a
+    * caught read error, so a bad filter built on the frame still throws).
+    * A store directory holding no data file yet (a writer that crashed
+    * before its first append) reads as empty: the declared schema leaves
+    * nothing to infer. */
+  def scanStore(spark: SparkSession, path: String,
+                schema: StructType): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else Some(spark.read.schema(schema).parquet(path))
+  }
+
+  /** Whether micro-batch `batchId` ends a compaction cycle of `every`
+    * batches (`every` ≤ 0: never). */
+  def due(every: Int, batchId: Long): Boolean =
+    every > 0 && (batchId + 1) % every == 0
 
   /** Total bytes of the parquet part-files under `dir`. */
   def dirBytes(spark: SparkSession, dir: String): Long = {
@@ -89,7 +108,7 @@ object Compact {
     * stream calling this every N micro-batches holds the ledger at
     * O(N + rows/targetBytes) fragments instead of one per batch forever. */
   def compactLedger(spark: SparkSession, ledgerDir: String,
-                    merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+                    merge: DataFrame => DataFrame,
                     targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val path = new org.apache.hadoop.fs.Path(ledgerDir)

@@ -3,9 +3,12 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.operators.{Incremental, PositionMachine}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sources.Compact
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.LongAccumulator
 
 /** A live tick in the streaming layer (same shape as the batch tick set). */
 final case class TickRow(pair: String, time: Timestamp, bid: Double, ask: Double)
@@ -689,7 +692,7 @@ object Streams {
     * invariant every minute-grain fold in this file shares; a straggler
     * for an already-final minute is dropped and counted via `dropped`. */
   def crossSignalStream(ticks: Dataset[SeqTick], shortP: Int = 14, longP: Int = 28,
-                        dropped: Option[org.apache.spark.util.LongAccumulator] = None)
+                        dropped: Option[LongAccumulator] = None)
       : Dataset[SignalPoint] = {
     require(2 <= shortP && shortP < longP,
       s"need 2 <= shortP < longP, got $shortP/$longP")
@@ -699,45 +702,15 @@ object Streams {
       .flatMapGroupsWithState[XSigState, SignalPoint](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) { (pair, rows, state: GroupState[XSigState]) =>
-        var st = state.getOption.getOrElse(
+        val st = state.getOption.getOrElse(
           XSigState(-1L, Nil, Nil, 0.0, haveS = false, 0.0, haveL = false))
+        val x = new SmaCross(shortP, longP, st.ring, st.prevS, st.haveS, st.prevL, st.haveL)
         val out = Vector.newBuilder[SignalPoint]
-        def usOf(t: Timestamp): Long =
-          t.getTime / 1000 * 1000000L + t.getNanos / 1000
-        def smaOf(ring: List[Double], p: Int): Option[Double] =
-          if (ring.size >= p) Some(ring.takeRight(p).sum / p) else None
-        def finalizeMinute(): Unit = if (st.openMinute >= 0) {
-          st.picks.sortBy(_.sec).lastOption.foreach { last =>
-            val ring = (st.ring :+ last.bid).takeRight(longP)
-            val s = smaOf(ring, shortP); val l = smaOf(ring, longP)
-            (s, l) match {
-              case (Some(sv), Some(lv)) if st.haveS && st.haveL =>
-                val t = new Timestamp(st.openMinute / 1000)
-                if (st.prevS <= st.prevL && sv > lv)
-                  out += SignalPoint(pair, t, "BUY", sv, shortP)
-                else if (st.prevS >= st.prevL && sv < lv)
-                  out += SignalPoint(pair, t, "SELL", sv, shortP)
-              case _ => ()
-            }
-            st = st.copy(ring = ring,
-              prevS = s.getOrElse(0.0), haveS = s.isDefined,
-              prevL = l.getOrElse(0.0), haveL = l.isDefined)
-          }
-          st = st.copy(picks = Nil)
+        val (open, picks) = x.crosses(st.openMinute, st.picks, rows, dropped) { (kind, at, sma) =>
+          out += SignalPoint(pair, at, if (kind == PositionMachine.Buy) "BUY" else "SELL",
+            sma, shortP)
         }
-        rows.toVector.sortBy(r => (usOf(r.time), r.seq)).foreach { r =>
-          val us = usOf(r.time)
-          val m = us - us % 60000000L
-          if (st.openMinute < 0) st = st.copy(openMinute = m)
-          else if (m > st.openMinute) { finalizeMinute(); st = st.copy(openMinute = m) }
-          else if (m < st.openMinute) dropped.foreach(_.add(1))
-          if (m == st.openMinute) {
-            val sec = us - us % 1000000L
-            if (!st.picks.exists(_.sec == sec)) // sorted ⇒ first wins
-              st = st.copy(picks = CorrSecPick(sec, us, r.seq, r.bid) :: st.picks)
-          }
-        }
-        state.update(st)
+        state.update(XSigState(open, picks, x.ring, x.prevS, x.haveS, x.prevL, x.haveL))
         out.result().iterator
       }
   }
@@ -759,7 +732,7 @@ object Streams {
     * State per pair: T18's O(period) candle/ring state + three scalars.
     * Same ordered-chunk replay contract as every minute-grain fold here. */
   def tradeStream(ticks: Dataset[SeqTick], shortP: Int = 14, longP: Int = 28,
-                  dropped: Option[org.apache.spark.util.LongAccumulator] = None)
+                  dropped: Option[LongAccumulator] = None)
       : Dataset[TradePoint] = {
     require(2 <= shortP && shortP < longP,
       s"need 2 <= shortP < longP, got $shortP/$longP")
@@ -769,55 +742,22 @@ object Streams {
       .flatMapGroupsWithState[TradeState, TradePoint](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) { (pair, rows, state: GroupState[TradeState]) =>
-        var st = state.getOption.getOrElse(
+        val st = state.getOption.getOrElse(
           TradeState(-1L, Nil, Nil, 0.0, haveS = false, 0.0, haveL = false,
             inPos = false, 0L, 0.0, 0))
+        val x = new SmaCross(shortP, longP, st.ring, st.prevS, st.haveS, st.prevL, st.haveL)
         // the position half of the state, stepped by the one position
         // machine; entries are minute starts, so the µs ↔ ms trip is exact
         val pos = new PositionMachine()
         pos.restore(pair, st.inPos, new Timestamp(st.entryUs / 1000), st.entry, st.n, null)
         val out = Vector.newBuilder[TradePoint]
-        def usOf(t: Timestamp): Long =
-          t.getTime / 1000 * 1000000L + t.getNanos / 1000
-        def smaOf(ring: List[Double], p: Int): Option[Double] =
-          if (ring.size >= p) Some(ring.takeRight(p).sum / p) else None
-        def finalizeMinute(): Unit = if (st.openMinute >= 0) {
-          st.picks.sortBy(_.sec).lastOption.foreach { last =>
-            val ring = (st.ring :+ last.bid).takeRight(longP)
-            val s = smaOf(ring, shortP); val l = smaOf(ring, longP)
-            (s, l) match {
-              case (Some(sv), Some(lv)) if st.haveS && st.haveL =>
-                // golden cross → BUY, dead cross → SELL, at the SMA value
-                val kind =
-                  if (st.prevS <= st.prevL && sv > lv) PositionMachine.Buy
-                  else if (st.prevS >= st.prevL && sv < lv) PositionMachine.Sell
-                  else PositionMachine.Other
-                val at = new Timestamp(st.openMinute / 1000)
-                if (kind != PositionMachine.Other && pos.step(kind, at, sv) != null)
-                  out += TradePoint(pair, pos.closed.toInt, pos.entryTime,
-                    pos.entryPrice, at, sv, sv - pos.entryPrice)
-              case _ => ()
-            }
-            st = st.copy(ring = ring,
-              prevS = s.getOrElse(0.0), haveS = s.isDefined,
-              prevL = l.getOrElse(0.0), haveL = l.isDefined)
-          }
-          st = st.copy(picks = Nil)
+        val (open, picks) = x.crosses(st.openMinute, st.picks, rows, dropped) { (kind, at, sma) =>
+          if (pos.step(kind, at, sma) != null)
+            out += TradePoint(pair, pos.closed.toInt, pos.entryTime,
+              pos.entryPrice, at, sma, sma - pos.entryPrice)
         }
-        rows.toVector.sortBy(r => (usOf(r.time), r.seq)).foreach { r =>
-          val us = usOf(r.time)
-          val m = us - us % 60000000L
-          if (st.openMinute < 0) st = st.copy(openMinute = m)
-          else if (m > st.openMinute) { finalizeMinute(); st = st.copy(openMinute = m) }
-          else if (m < st.openMinute) dropped.foreach(_.add(1))
-          if (m == st.openMinute) {
-            val sec = us - us % 1000000L
-            if (!st.picks.exists(_.sec == sec)) // sorted ⇒ first wins
-              st = st.copy(picks = CorrSecPick(sec, us, r.seq, r.bid) :: st.picks)
-          }
-        }
-        state.update(st.copy(inPos = pos.open, entryUs = pos.entryTime.getTime * 1000,
-          entry = pos.entryPrice, n = pos.closed.toInt))
+        state.update(TradeState(open, picks, x.ring, x.prevS, x.haveS, x.prevL, x.haveL,
+          pos.open, pos.entryTime.getTime * 1000, pos.entryPrice, pos.closed.toInt))
         out.result().iterator
       }
   }
@@ -841,8 +781,6 @@ object Streams {
         var st = state.getOption.getOrElse(
           ZigState(started = false, 0, 0.0, 0L, 0.0, 0L, 0L))
         val out = Vector.newBuilder[ZigPoint]
-        def usOf(t: Timestamp): Long =
-          t.getTime / 1000 * 1000000L + t.getNanos / 1000
         def tsOf(us: Long): Timestamp = {
           val t = new Timestamp(us / 1000)
           t.setNanos((us % 1000000L).toInt * 1000)
@@ -888,7 +826,7 @@ object Streams {
     * is state, not output. State per pair: ≤60 second-picks + one decimal
     * string — O(1) at any history length. */
   def adLineStream(ticks: Dataset[SeqTick],
-                   dropped: Option[org.apache.spark.util.LongAccumulator] = None)
+                   dropped: Option[LongAccumulator] = None)
       : Dataset[AdPoint] = {
     val spark = ticks.sparkSession
     import spark.implicits._
@@ -896,41 +834,25 @@ object Streams {
       .flatMapGroupsWithState[AdLineState, AdPoint](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) { (pair, rows, state: GroupState[AdLineState]) =>
-        var st = state.getOption.getOrElse(AdLineState(-1L, Nil, "0"))
+        val st = state.getOption.getOrElse(AdLineState(-1L, Nil, "0"))
+        var ad = st.ad
         val out = Vector.newBuilder[AdPoint]
-        def usOf(t: Timestamp): Long =
-          t.getTime / 1000 * 1000000L + t.getNanos / 1000
-        // the batch side's round(mfm,6)::DECIMAL(18,6) snap
-        def dec(d: Double): BigDecimal =
-          BigDecimal.decimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        def finalizeMinute(): Unit = if (st.openMinute >= 0) {
-          val ps = st.picks.sortBy(_.sec)
+        val (open, picks) = candleMinutes(st.openMinute, Vector(st.picks), rows,
+            _ => 0, dropped) { (minute, sides) =>
+          val ps = sides(0)
           ps.lastOption.foreach { last =>
             val h = ps.map(_.bid).max
             val l = ps.map(_.bid).min
             val c = last.bid
             val vol = ps.size.toLong
             val mfm = if (h == l) 0.0 else (2.0 * c - l - h) / (h - l)
-            val ad = BigDecimal(st.ad) + dec(mfm) * BigDecimal(vol)
-            out += AdPoint(pair, new Timestamp(st.openMinute / 1000), c, vol,
-              ad.toDouble)
-            st = st.copy(ad = ad.toString)
-          }
-          st = st.copy(picks = Nil)
-        }
-        rows.toVector.sortBy(r => (usOf(r.time), r.seq)).foreach { r =>
-          val us = usOf(r.time)
-          val m = us - us % 60000000L
-          if (st.openMinute < 0) st = st.copy(openMinute = m)
-          else if (m > st.openMinute) { finalizeMinute(); st = st.copy(openMinute = m) }
-          else if (m < st.openMinute) dropped.foreach(_.add(1))
-          if (m == st.openMinute) {
-            val sec = us - us % 1000000L
-            if (!st.picks.exists(_.sec == sec)) // sorted ⇒ first wins
-              st = st.copy(picks = CorrSecPick(sec, us, r.seq, r.bid) :: st.picks)
+            // the batch side's round(mfm,6)::DECIMAL(18,6) snap
+            val next = BigDecimal(ad) + dec6(mfm) * BigDecimal(vol)
+            out += AdPoint(pair, new Timestamp(minute / 1000), c, vol, next.toDouble)
+            ad = next.toString
           }
         }
-        state.update(st)
+        state.update(AdLineState(open, picks(0), ad))
         out.result().iterator
       }
   }
@@ -1073,7 +995,7 @@ object Streams {
     * not this operator. */
   def corrStream(ticks: Dataset[SeqTick], pairA: String, pairB: String,
                  n: Int = 30,
-                 dropped: Option[org.apache.spark.util.LongAccumulator] = None)
+                 dropped: Option[LongAccumulator] = None)
       : Dataset[CorrPoint] = {
     require(n >= 2, s"window must be >= 2, got $n")
     require(pairA != pairB, "pairs must differ")
@@ -1096,7 +1018,7 @@ object Streams {
     * dimension, known up front — reference `dim_currency` seeds 6). */
   def corrStreamAll(ticks: Dataset[SeqTick], pairs: Seq[String],
                     n: Int = 30,
-                    dropped: Option[org.apache.spark.util.LongAccumulator] = None)
+                    dropped: Option[LongAccumulator] = None)
       : Dataset[CorrPointCombo] = {
     require(n >= 2, s"window must be >= 2, got $n")
     require(pairs.distinct.size == pairs.size && pairs.size >= 2,
@@ -1128,78 +1050,157 @@ object Streams {
     * pair in the group is the y side. */
   private def foldCombo(pairA: String, n: Int, rows: Iterator[SeqTick],
                         state: GroupState[CorrComboState],
-                        dropped: Option[org.apache.spark.util.LongAccumulator] = None)
+                        dropped: Option[LongAccumulator] = None)
       : Iterator[CorrPoint] = {
     val nd = n.toDouble
     var st = state.getOption.getOrElse(
-          CorrComboState(-1L, Nil, Nil, 0L, "", "", Nil))
-        val out = Vector.newBuilder[CorrPoint]
-        // epoch µs: getTime is ms (incl. sub-second), getNanos the full
-        // sub-second — combine without double-counting the ms part
-        def usOf(t: Timestamp): Long =
-          t.getTime / 1000 * 1000000L + t.getNanos / 1000
-        // the batch side's double→DECIMAL(12,6) cast (Spark Decimal wraps
-        // BigDecimal.decimal = valueOf(double), then HALF_UP to scale 6)
-        def dec(d: Double): BigDecimal =
-          BigDecimal.decimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        def close(picks: List[CorrSecPick]): Option[Double] =
-          picks.sortBy(_.sec).lastOption.map(_.bid)
-        def finalizeMinute(): Unit = if (st.openMinute >= 0) {
-          (close(st.picksA), close(st.picksB)) match {
-            case (Some(a), Some(b)) => // aligned minute → grid row
-              val ca = dec(a); val cb = dec(b)
-              var ring = st.ring
-              if (st.prevCa.nonEmpty) {
-                val dx = ca - BigDecimal(st.prevCa)
-                val dy = cb - BigDecimal(st.prevCb)
-                ring = (ring :+ s"$dx $dy").takeRight(n)
+      CorrComboState(-1L, Nil, Nil, 0L, "", "", Nil))
+    val out = Vector.newBuilder[CorrPoint]
+    val (open, picks) = candleMinutes(st.openMinute, Vector(st.picksA, st.picksB), rows,
+        r => if (r.pair == pairA) 0 else 1, dropped) { (minute, sides) =>
+      (sides(0).lastOption, sides(1).lastOption) match {
+        case (Some(a), Some(b)) => // aligned minute → grid row
+          val ca = dec6(a.bid); val cb = dec6(b.bid)
+          var ring = st.ring
+          if (st.prevCa.nonEmpty) {
+            val dx = ca - BigDecimal(st.prevCa)
+            val dy = cb - BigDecimal(st.prevCb)
+            ring = (ring :+ s"$dx $dy").takeRight(n)
+          }
+          val (corr, beta) =
+            if (ring.size == n) { // rn >= n+1 in batch terms
+              val ds = ring.map { s =>
+                val i = s.indexOf(' ')
+                (BigDecimal(s.substring(0, i)), BigDecimal(s.substring(i + 1)))
               }
-              val (corr, beta) =
-                if (ring.size == n) { // rn >= n+1 in batch terms
-                  val ds = ring.map { s =>
-                    val i = s.indexOf(' ')
-                    (BigDecimal(s.substring(0, i)), BigDecimal(s.substring(i + 1)))
-                  }
-                  // exact decimal sums (order-independent), THEN doubles —
-                  // the same boundary the batch plan crosses
-                  val sx = ds.map(_._1).sum.toDouble
-                  val sy = ds.map(_._2).sum.toDouble
-                  val sxy = ds.map(d => d._1 * d._2).sum.toDouble
-                  val sxx = ds.map(d => d._1 * d._1).sum.toDouble
-                  val syy = ds.map(d => d._2 * d._2).sum.toDouble
-                  val vx = nd * sxx - sx * sx
-                  val vy = nd * syy - sy * sy
-                  val cov = nd * sxy - sx * sy
-                  (if (vx > 0.0 && vy > 0.0) Some(cov / math.sqrt(vx * vy)) else None,
-                    if (vx > 0.0) Some(cov / vx) else None)
-                } else (None, None)
-              out += CorrPoint(new Timestamp(st.openMinute / 1000), n, corr, beta)
-              st = st.copy(aligned = st.aligned + 1,
-                prevCa = ca.toString, prevCb = cb.toString, ring = ring)
-            case _ => () // unaligned: no grid row, prev/ring untouched
+              // exact decimal sums (order-independent), THEN doubles —
+              // the same boundary the batch plan crosses
+              val sx = ds.map(_._1).sum.toDouble
+              val sy = ds.map(_._2).sum.toDouble
+              val sxy = ds.map(d => d._1 * d._2).sum.toDouble
+              val sxx = ds.map(d => d._1 * d._1).sum.toDouble
+              val syy = ds.map(d => d._2 * d._2).sum.toDouble
+              val vx = nd * sxx - sx * sx
+              val vy = nd * syy - sy * sy
+              val cov = nd * sxy - sx * sy
+              (if (vx > 0.0 && vy > 0.0) Some(cov / math.sqrt(vx * vy)) else None,
+                if (vx > 0.0) Some(cov / vx) else None)
+            } else (None, None)
+          out += CorrPoint(new Timestamp(minute / 1000), n, corr, beta)
+          st = st.copy(aligned = st.aligned + 1,
+            prevCa = ca.toString, prevCb = cb.toString, ring = ring)
+        case _ => () // unaligned: no grid row, prev/ring untouched
+      }
+    }
+    state.update(st.copy(openMinute = open, picksA = picks(0), picksB = picks(1)))
+    out.result().iterator
+  }
+
+  /** Epoch µs of `t`: `getTime` is ms including the sub-second part and
+    * `getNanos` the full sub-second, so combine without counting the ms
+    * part twice. */
+  private[graft] def usOf(t: Timestamp): Long =
+    t.getTime / 1000 * 1000000L + t.getNanos / 1000
+
+  /** `d` snapped to 6 decimals HALF_UP — the batch side's double →
+    * DECIMAL(·,6) cast (Spark's Decimal wraps `BigDecimal.decimal` =
+    * `valueOf(double)`, then rounds HALF_UP to scale 6). */
+  private def dec6(d: Double): BigDecimal =
+    BigDecimal.decimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+
+  /** The one minute candler of the minute-grain folds (T14, T18, T19,
+    * T22): the reference's per-second first-tick-wins insert gate
+    * (src/gmo/ws-connection.py:47-57) feeding its 1-minute candle step
+    * (src/etl/flows/transform.py:19-129), as carried keyed state.
+    *
+    * `rows` fold in (µs, seq) order into the one OPEN minute `open` (−1
+    * before the first tick), whose per-second first-tick picks are kept
+    * per side: `side(tick)` indexes `picks` — one side for a pair's fold,
+    * two for a pair combo. A tick in a later minute finalizes the open
+    * one, calling `close(minuteStartUs, picks)` with each side's picks
+    * ascending by second (its close is the last), and opens its own. A
+    * tick for an already finalized minute is a straggler: its candle has
+    * been emitted and append mode has no retraction, so it is dropped and
+    * counted in `dropped` when one is given (task retries can overcount:
+    * an alarm signal, not an exact ledger).
+    *
+    * Returns the open minute and its picks (newest first, as carried in
+    * state) for the fold's next batch. Emission is independent of the
+    * micro-batch split whenever each key's ticks arrive in non-decreasing
+    * minute order across batches — the ordered-chunk replay contract. */
+  private[graft] def candleMinutes(open: Long, picks: IndexedSeq[List[CorrSecPick]],
+                                   rows: Iterator[SeqTick], side: SeqTick => Int,
+                                   dropped: Option[LongAccumulator])(
+      close: (Long, IndexedSeq[List[CorrSecPick]]) => Unit)
+      : (Long, IndexedSeq[List[CorrSecPick]]) = {
+    var minute = open
+    val ps = picks.toArray
+    rows.toVector.sortBy(r => (usOf(r.time), r.seq)).foreach { r =>
+      val us = usOf(r.time)
+      val m = us - us % 60000000L
+      if (minute < 0) minute = m
+      else if (m > minute) {
+        close(minute, ps.toIndexedSeq.map(_.sortBy(_.sec)))
+        ps.indices.foreach(ps(_) = Nil)
+        minute = m
+      } else if (m < minute) dropped.foreach(_.add(1))
+      if (m == minute) {
+        val sec = us - us % 1000000L
+        val i = side(r)
+        if (!ps(i).exists(_.sec == sec)) // sorted ⇒ first wins
+          ps(i) = CorrSecPick(sec, us, r.seq, r.bid) :: ps(i)
+      }
+    }
+    (minute, ps.toIndexedSeq)
+  }
+
+  /** The SMA-cross step of T18 and T19 over one pair's finalized minute
+    * closes: a ring of the last `longP` closes (oldest first), both SMAs
+    * (oldest→newest sum / period, the order Spark's batch sliding-frame
+    * avg uses), and the cross between consecutive closes — BUY (golden)
+    * when `prevS ≤ prevL ∧ s > l`, SELL (dead) on the mirror. The fields
+    * are the fold state's, restored before a batch and written back after
+    * it. */
+  private final class SmaCross(shortP: Int, longP: Int, var ring: List[Double],
+                               var prevS: Double, var haveS: Boolean,
+                               var prevL: Double, var haveL: Boolean) {
+    private def smaOf(p: Int): Option[Double] =
+      if (ring.size >= p) Some(ring.takeRight(p).sum / p) else None
+
+    /** Steps one close; returns [[PositionMachine.Buy]], [[PositionMachine
+      * .Sell]] or [[PositionMachine.Other]]. */
+    def step(close: Double): Int = {
+      ring = (ring :+ close).takeRight(longP)
+      val s = smaOf(shortP); val l = smaOf(longP)
+      val kind = (s, l) match {
+        case (Some(sv), Some(lv)) if haveS && haveL =>
+          if (prevS <= prevL && sv > lv) PositionMachine.Buy
+          else if (prevS >= prevL && sv < lv) PositionMachine.Sell
+          else PositionMachine.Other
+        case _ => PositionMachine.Other
+      }
+      prevS = s.getOrElse(0.0); haveS = s.isDefined
+      prevL = l.getOrElse(0.0); haveL = l.isDefined
+      kind
+    }
+
+    /** Candles `rows` ([[candleMinutes]], one side) and steps each
+      * finalized minute's close, calling `cross(kind, minuteStart,
+      * shortSma)` at every BUY or SELL. Returns the open minute and its
+      * picks to carry. */
+    def crosses(open: Long, picks: List[CorrSecPick], rows: Iterator[SeqTick],
+                dropped: Option[LongAccumulator])(
+        cross: (Int, Timestamp, Double) => Unit): (Long, List[CorrSecPick]) = {
+      val (m, ps) = candleMinutes(open, Vector(picks), rows, _ => 0, dropped) {
+        (minute, sides) =>
+          sides(0).lastOption.foreach { last =>
+            val kind = step(last.bid)
+            if (kind != PositionMachine.Other)
+              cross(kind, new Timestamp(minute / 1000), prevS)
           }
-          st = st.copy(picksA = Nil, picksB = Nil)
-        }
-        rows.toVector.sortBy(r => (usOf(r.time), r.seq)).foreach { r =>
-          val us = usOf(r.time)
-          val m = us - us % 60000000L
-          if (st.openMinute < 0) st = st.copy(openMinute = m)
-          else if (m > st.openMinute) { finalizeMinute(); st = st.copy(openMinute = m) }
-          // m < openMinute cannot happen under ordered chunk replay; such
-          // a straggler is dropped (its minute already finalized) and
-          // COUNTED so an unordered production source is visible, not silent
-          else if (m < st.openMinute) dropped.foreach(_.add(1))
-          if (m == st.openMinute) {
-            val sec = us - us % 1000000L
-            val pick = CorrSecPick(sec, us, r.seq, r.bid)
-            def keep(l: List[CorrSecPick]): List[CorrSecPick] =
-              if (l.exists(_.sec == sec)) l else pick :: l // sorted ⇒ first wins
-            if (r.pair == pairA) st = st.copy(picksA = keep(st.picksA))
-            else st = st.copy(picksB = keep(st.picksB))
-          }
-        }
-        state.update(st)
-        out.result().iterator
+      }
+      (m, ps(0))
+    }
   }
 
   /** T13: running drawdown per pair via [[DrawdownProcessor]] — the
@@ -1247,18 +1248,45 @@ object Streams {
         org.apache.spark.sql.streaming.OutputMode.Append())
   }
 
-  /** T4: CDC relay into a parquet sink with first-write-wins semantics.
-    * Source offsets play the reference's `last_time` cursor; `foreachBatch`
-    * re-runs on failure with the same batch, so the idempotent merge
-    * ([[Incremental.appendNew]] against what the sink already holds) makes
-    * redelivery safe — the streaming analogue of ON CONFLICT DO NOTHING.
-    *
-    * `perBatch` runs with *batch* semantics inside each micro-batch before
-    * the merge — the slot for deterministic per-poll normalization (e.g.
-    * [[graft.operators.Ticks.dedupSecond]], whose (time, seq) tie-break the
-    * streaming `dropDuplicates` cannot express), exactly where the
-    * reference normalizes each poll's rows before its conflict-skipping
-    * insert (reference: src/gmo/ws_ticker_server.py:228-243). */
+  /** The one start of the ledger queries: `step` runs each micro-batch
+    * with batch semantics under an append-mode, AvailableNow query
+    * checkpointed at `checkpoint`. A replayed micro-batch keeps its id, so
+    * `step` may key ledger rows by it. Every `compactEvery` batches (0:
+    * never) the ledger at `ledger` is compacted with `rollup`, which must
+    * be the ledger's own reader algebra ([[Compact.compactLedger]]). */
+  private def ledgerQuery(in: DataFrame, checkpoint: String, compactEvery: Int = 0,
+                          ledger: String = "",
+                          rollup: DataFrame => DataFrame = identity)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        step(batch, batchId)
+        if (Compact.due(compactEvery, batchId))
+          Compact.compactLedger(batch.sparkSession, ledger, rollup)
+        ()
+      }
+      .start()
+
+  /** The rows of `batch` whose `keys` the first-write-wins store at `path`
+    * lacks; the whole batch while the store is absent. The store is read
+    * with `schema`, the schema of the frame that writes it, so a store
+    * directory with no data file yet reads as empty. */
+  private def novelAgainst(batch: DataFrame, path: String, schema: StructType,
+                           keys: Seq[String]): DataFrame =
+    Compact.scanStore(batch.sparkSession, path, schema)
+      .map(Incremental.newRows(_, batch, keys)).getOrElse(batch)
+
+  /** `batch` spread over the cores by doc_id: a maxFilesPerTrigger=1
+    * micro-batch arrives as one partition, and the per-document work of
+    * the t27, t30, t31, t32 and t33 steps is CPU-bound. (t25, t26 and t28
+    * run without it: on t26 it cost a job per micro-batch and gained
+    * nothing.) */
+  private def spread(batch: DataFrame): DataFrame =
+    batch.repartition(batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+
   /** T25 (streaming L60): corpus build with an ingest-time dedup guard.
     * Each micro-batch is screened against everything that arrived before
     * it — exact-content, near-duplicate (MinHash/LSH, corpus-always-wins),
@@ -1277,26 +1305,15 @@ object Streams {
     * are already present. */
   def ingestToParquet(docs: DataFrame, seenPath: String, acceptPath: String,
                       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        def readOr(path: String): DataFrame =
-          try spark.read.parquet(path)
-          catch {
-            case _: org.apache.spark.sql.AnalysisException =>
-              batch.filter(lit(false)) // store not created yet: empty, same schema
-          }
-        val seen = readOr(seenPath)
-        val accepted = graft.operators.CorpusPrep.incrementalIngest(seen, batch)
-        Incremental.newRows(readOr(acceptPath), accepted, Seq("doc_id"))
-          .write.mode("append").parquet(acceptPath)
-        Incremental.newRows(seen, batch, Seq("doc_id"))
-          .write.mode("append").parquet(seenPath)
-      }
-      .start()
+    ledgerQuery(docs, checkpoint) { (batch, _) =>
+      val seen = Compact.scanStore(batch.sparkSession, seenPath, batch.schema)
+        .getOrElse(batch.filter(lit(false))) // store not created yet: empty
+      val accepted = graft.operators.CorpusPrep.incrementalIngest(seen, batch)
+      novelAgainst(accepted, acceptPath, accepted.schema, Seq("doc_id"))
+        .write.mode("append").parquet(acceptPath)
+      Incremental.newRows(seen, batch, Seq("doc_id"))
+        .write.mode("append").parquet(seenPath)
+    }
 
   /** T26 (streaming L61): corpus-sketch maintenance as an APPEND-ONLY
     * ledger of per-batch KMV sketches. Each micro-batch contributes its own
@@ -1314,27 +1331,18 @@ object Streams {
     * append (duplicate: fine). No read-modify-write exists to corrupt. */
   def sketchStream(docs: DataFrame, ledgerPath: String, checkpoint: String,
                    n: Int = 3, k: Int = 256, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no fan-out before the sketch: a maxFilesPerTrigger=1 micro-batch
-        // arrives as one partition, but tokenizing once and shingling the
-        // projected tokens is linear in the batch's text and the bottom-k
-        // heaps partial-aggregate on that partition, so the micro-batch
-        // runs one shuffle (the group-by's) of ≤ k rows per source
-        graft.operators.Sketches.sourceSketch(batch, n, k)
-          .write.mode("append").parquet(ledgerPath)
-        // periodic fragment roll-up: re-merging per source IS the ledger's
-        // reader algebra (KMV union), so compaction is a no-op to any
-        // roll-up and crash-safe by idempotence
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.sources.Compact.compactLedger(batch.sparkSession, ledgerPath,
-            df => graft.operators.Sketches.mergeSketches(df, k))
-        ()
-      }
-      .start()
+    // periodic fragment roll-up: re-merging per source IS the ledger's
+    // reader algebra (KMV union), so compaction is a no-op to any roll-up
+    // and crash-safe by idempotence
+    ledgerQuery(docs, checkpoint, compactEvery, ledgerPath,
+        graft.operators.Sketches.mergeSketches(_, k)) { (batch, _) =>
+      // no fan-out before the sketch: tokenizing once and shingling the
+      // projected tokens is linear in the batch's text and the bottom-k
+      // heaps partial-aggregate on the one partition, so the micro-batch
+      // runs one shuffle (the group-by's) of ≤ k rows per source
+      graft.operators.Sketches.sourceSketch(batch, n, k)
+        .write.mode("append").parquet(ledgerPath)
+    }
 
   /** T27 (streaming L64): vocabulary-growth maintenance as an append-only
     * ledger of per-batch first-occurrence partials `(tok, first_doc)`.
@@ -1351,26 +1359,13 @@ object Streams {
     * Σ per-batch vocab, the same order as the batch op's shuffle. */
   def heapsStream(docs: DataFrame, ledgerPath: String,
                   checkpoint: String, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a micro-batch arrives as one partition, and every document is
-        // tokenized and exploded to one row per word before the per-token
-        // min: spread the documents over the cores first
-        val wide = batch.repartition(
-          batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-        graft.operators.TextAnalysis.firstOccurrence(wide)
-          .write.mode("append").parquet(ledgerPath)
-        // periodic fragment roll-up: min-per-token IS the reader algebra —
-        // idempotent, so append-then-delete is crash-safe at any point
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.sources.Compact.compactLedger(batch.sparkSession, ledgerPath,
-            df => df.groupBy(col("tok")).agg(min(col("first_doc")).as("first_doc")))
-        ()
-      }
-      .start()
+    // periodic fragment roll-up: min-per-token IS the reader algebra —
+    // idempotent, so append-then-delete is crash-safe at any point
+    ledgerQuery(docs, checkpoint, compactEvery, ledgerPath,
+        _.groupBy(col("tok")).agg(min(col("first_doc")).as("first_doc"))) { (batch, _) =>
+      graft.operators.TextAnalysis.firstOccurrence(spread(batch))
+        .write.mode("append").parquet(ledgerPath)
+    }
 
   /** T28 (streaming L62): the length-bucket padding report maintained
     * incrementally. Counting aggregates are NOT idempotent, so the two
@@ -1390,38 +1385,25 @@ object Streams {
   def lengthStream(docs: DataFrame, seenPath: String, ledgerPath: String,
                    checkpoint: String, step: Int = 32,
                    maxLen: Int = 512, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val novel = (
-          try Incremental.newRows(spark.read.parquet(seenPath), batch,
-            Seq("doc_id"))
-          catch { case _: org.apache.spark.sql.AnalysisException => batch }
-        ).localCheckpoint() // two sinks below; compute the screen once
-        graft.operators.TextAnalysis.lengthBuckets(novel, step, maxLen)
-          .select(lit(batchId).as("batch_id"), col("bucket"), col("n_docs"),
-            col("sum_tokens"))
-          .write.mode("append").parquet(ledgerPath)
-        novel.select("doc_id").write.mode("append").parquet(seenPath)
-        // periodic fragment roll-up — batch_id-AWARE: counters are not
-        // idempotent, so compaction only collapses duplicate rows per
-        // (batch_id, bucket) (identical by per-batch determinism) and
-        // KEEPS the batch_id key; that key is what lets the reader's
-        // roll-up absorb both a replayed batch's re-append and a crash
-        // that leaves originals beside the merged fragment
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.sources.Compact.compactLedger(spark, ledgerPath,
-            df => df.groupBy(col("batch_id"), col("bucket"))
-              .agg(max(col("n_docs")).as("n_docs"),
-                max(col("sum_tokens")).as("sum_tokens"))
-              .select(col("batch_id"), col("bucket"), col("n_docs"),
-                col("sum_tokens")))
-        ()
-      }
-      .start()
+    // periodic fragment roll-up — batch_id-AWARE: counters are not
+    // idempotent, so compaction only collapses duplicate rows per
+    // (batch_id, bucket) (identical by per-batch determinism) and KEEPS
+    // the batch_id key; that key is what lets the reader's roll-up absorb
+    // both a replayed batch's re-append and a crash that leaves originals
+    // beside the merged fragment
+    ledgerQuery(docs, checkpoint, compactEvery, ledgerPath,
+        _.groupBy(col("batch_id"), col("bucket"))
+          .agg(max(col("n_docs")).as("n_docs"), max(col("sum_tokens")).as("sum_tokens"))
+          .select(col("batch_id"), col("bucket"), col("n_docs"),
+            col("sum_tokens"))) { (batch, batchId) =>
+      val novel = novelAgainst(batch, seenPath, batch.select("doc_id").schema,
+        Seq("doc_id")).localCheckpoint() // two sinks below; compute the screen once
+      graft.operators.TextAnalysis.lengthBuckets(novel, step, maxLen)
+        .select(lit(batchId).as("batch_id"), col("bucket"), col("n_docs"),
+          col("sum_tokens"))
+        .write.mode("append").parquet(ledgerPath)
+      novel.select("doc_id").write.mode("append").parquet(seenPath)
+    }
 
   /** Converged read of a [[lengthStream]] ledger: batch-replay dedup, then
     * the cross-batch counter sum, then the same derived padded/pad_waste
@@ -1455,24 +1437,10 @@ object Streams {
   def boilerplateStream(docs: DataFrame, ledgerPath: String,
                         checkpoint: String, span: Int = 10,
                         compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a micro-batch arrives as one partition, and gridding each
-        // document into span-word segments is per-row string work: spread
-        // the documents over the cores first
-        val wide = batch.repartition(
-          batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-        graft.operators.Dedup.gridSegments(wide.select("doc_id", "text"), span)
-          .write.mode("append").parquet(ledgerPath)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.sources.Compact.compactLedger(batch.sparkSession, ledgerPath,
-            df => df.distinct())
-        ()
-      }
-      .start()
+    ledgerQuery(docs, checkpoint, compactEvery, ledgerPath, _.distinct()) { (batch, _) =>
+      graft.operators.Dedup.gridSegments(spread(batch).select("doc_id", "text"), span)
+        .write.mode("append").parquet(ledgerPath)
+    }
 
   /** T32 (streaming L78): unigram-LM token accounting live — each
     * micro-batch of arriving docs is Viterbi-encoded under a FROZEN
@@ -1495,26 +1463,10 @@ object Streams {
     // the model is FROZEN for the stream's lifetime: collect its
     // vocabulary-bounded rows ONCE here, not once per micro-batch
     val um = graft.operators.Unigram.collectModel(model)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // a micro-batch arrives as one partition, and the per-word
-        // Viterbi DP is the CPU-bound stage: spread the documents over the
-        // cores first
-        val wide = batch.repartition(
-          spark.sparkContext.defaultParallelism, col("doc_id"))
-        graft.operators.Unigram.encodeWith(
-            wide.select("doc_id", "text"), um, maxPiece)
-          .write.mode("append").parquet(ledgerPath)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.sources.Compact.compactLedger(spark, ledgerPath,
-            df => df.distinct())
-        ()
-      }
-      .start()
+    ledgerQuery(docs, checkpoint, compactEvery, ledgerPath, _.distinct()) { (batch, _) =>
+      graft.operators.Unigram.encodeWith(spread(batch).select("doc_id", "text"), um, maxPiece)
+        .write.mode("append").parquet(ledgerPath)
+    }
   }
 
   /** T33 (streaming L79): byte-level BPE encode of arriving documents
@@ -1530,26 +1482,11 @@ object Streams {
                            merges: Seq[(Int, String, String, Long)],
                            ledgerPath: String, checkpoint: String,
                            compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // a micro-batch arrives as one partition, and folding every merge
-        // rule over each word's bytes is the CPU-bound stage: spread the
-        // documents over the cores first
-        val wide = batch.repartition(
-          spark.sparkContext.defaultParallelism, col("doc_id"))
-        graft.operators.TextAnalysis.bpeEncodeBytes(
-            wide.select("doc_id", "text"), merges)
-          .write.mode("append").parquet(ledgerPath)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.sources.Compact.compactLedger(spark, ledgerPath,
-            df => df.distinct())
-        ()
-      }
-      .start()
+    ledgerQuery(docs, checkpoint, compactEvery, ledgerPath, _.distinct()) { (batch, _) =>
+      graft.operators.TextAnalysis.bpeEncodeBytes(
+          spread(batch).select("doc_id", "text"), merges)
+        .write.mode("append").parquet(ledgerPath)
+    }
 
   /** T31 (streaming L30/L60): incremental ExactSubstr dedup live — each
     * micro-batch of NEW docs is scrubbed against the standing corpus's
@@ -1576,63 +1513,51 @@ object Streams {
   def substrStream(docs: DataFrame, seenPath: String, gramPath: String,
                    outPath: String, checkpoint: String, minRun: Int = 10,
                    compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val wide = batch.repartition(
-          spark.sparkContext.defaultParallelism, col("doc_id"))
-        val novel = (
-          try Incremental.newRows(spark.read.parquet(seenPath), wide,
-            Seq("doc_id"))
-          catch { case _: org.apache.spark.sql.AnalysisException => wide }
-        ).select("doc_id", "text").localCheckpoint() // scrub + grams + seen
-        // r16 optimization (guide §1.2): the batch's every-offset gram set
-        // feeds BOTH the scrub join and the ledger append — computed once
-        // and checkpointed (O(batch tokens) rows, bounded by the batch),
-        // where the previous shape ran the split+explode+md5 pipeline
-        // twice per micro-batch
-        val toks = novel.select(col("doc_id"),
-          split(col("text"), " ").as("toks"))
-        val grams = graft.operators.Dedup.gramsOf(toks, minRun)
-          .localCheckpoint()
-        val idx =
-          try spark.read.parquet(gramPath)
-            .filter(col("batch_id") < batchId).select(col("h"))
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            grams.limit(0).select(col("h")) }
-        graft.operators.Dedup.dedupSubstrAgainstGrams(idx, toks, grams, minRun)
-          .write.mode("append").parquet(outPath)
-        grams.select(lit(batchId).as("batch_id"), col("h")).distinct()
-          .write.mode("append").parquet(gramPath)
-        novel.select("doc_id").write.mode("append").parquet(seenPath)
-        // gram rows are (batch_id, h) set data — compaction is a plain
-        // distinct, crash-safe in the ledger protocol
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.sources.Compact.compactLedger(spark, gramPath,
-            df => df.distinct())
-        ()
-      }
-      .start()
+    // gram rows are (batch_id, h) set data — compaction is a plain
+    // distinct, crash-safe in the ledger protocol
+    ledgerQuery(docs, checkpoint, compactEvery, gramPath, _.distinct()) { (batch, batchId) =>
+      val wide = spread(batch)
+      val novel = novelAgainst(wide, seenPath, wide.select("doc_id").schema,
+        Seq("doc_id")).select("doc_id", "text").localCheckpoint() // scrub + grams + seen
+      // r16 optimization (guide §1.2): the batch's every-offset gram set
+      // feeds BOTH the scrub join and the ledger append — computed once
+      // and checkpointed (O(batch tokens) rows, bounded by the batch),
+      // where the previous shape ran the split+explode+md5 pipeline
+      // twice per micro-batch
+      val toks = novel.select(col("doc_id"),
+        split(col("text"), " ").as("toks"))
+      val grams = graft.operators.Dedup.gramsOf(toks, minRun)
+        .localCheckpoint()
+      val gramRows = grams.select(lit(batchId).as("batch_id"), col("h")).distinct()
+      val idx = Compact.scanStore(batch.sparkSession, gramPath, gramRows.schema)
+        .map(_.filter(col("batch_id") < batchId).select(col("h")))
+        .getOrElse(grams.limit(0).select(col("h")))
+      graft.operators.Dedup.dedupSubstrAgainstGrams(idx, toks, grams, minRun)
+        .write.mode("append").parquet(outPath)
+      gramRows.write.mode("append").parquet(gramPath)
+      novel.select("doc_id").write.mode("append").parquet(seenPath)
+    }
 
+  /** T4: CDC relay into a parquet sink with first-write-wins semantics.
+    * Source offsets play the reference's `last_time` cursor; `foreachBatch`
+    * re-runs on failure with the same batch, so the idempotent merge
+    * ([[Incremental.appendNew]] against what the sink already holds) makes
+    * redelivery safe — the streaming analogue of ON CONFLICT DO NOTHING.
+    *
+    * `perBatch` runs with *batch* semantics inside each micro-batch before
+    * the merge — the slot for deterministic per-poll normalization (e.g.
+    * [[graft.operators.Ticks.dedupSecond]], whose (time, seq) tie-break the
+    * streaming `dropDuplicates` cannot express), exactly where the
+    * reference normalizes each poll's rows before its conflict-skipping
+    * insert (reference: src/gmo/ws_ticker_server.py:228-243). */
   def relayToParquet(ticks: DataFrame, sinkPath: String, checkpoint: String,
                      keys: Seq[String] = Seq("pair", "time"),
                      perBatch: DataFrame => DataFrame = identity): StreamingQuery =
-    ticks.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val staged = perBatch(batch)
-        // append-only: anti-join the batch against the sink's existing keys
-        // and append just the novel rows — O(batch), never a sink rewrite
-        val toWrite =
-          try Incremental.newRows(spark.read.parquet(sinkPath), staged, keys)
-          catch { case _: org.apache.spark.sql.AnalysisException => staged }
-        toWrite.write.mode("append").parquet(sinkPath)
-      }
-      .start()
+    ledgerQuery(ticks, checkpoint) { (batch, _) =>
+      val staged = perBatch(batch)
+      // append-only: anti-join the batch against the sink's existing keys
+      // and append just the novel rows — O(batch), never a sink rewrite
+      novelAgainst(staged, sinkPath, staged.schema, keys)
+        .write.mode("append").parquet(sinkPath)
+    }
 }

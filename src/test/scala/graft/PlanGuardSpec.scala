@@ -705,7 +705,8 @@ class PlanGuardSpec extends SparkSpec {
       "t18_signals" -> Streams.crossSignalStream(seqTicks).toDF(),
       "t19_trades" -> Streams.tradeStream(seqTicks).toDF(),
       "t20_renko" -> Streams.renkoStream(seqTicks, 50.0).toDF(),
-      "t21_zigzag" -> Streams.zigzagStream(seqTicks).toDF())
+      "t21_zigzag" -> Streams.zigzagStream(seqTicks).toDF(),
+      "t22_adline" -> Streams.adLineStream(seqTicks).toDF())
     val offenders = plans.flatMap { case (name, df) =>
       val plan = df.queryExecution.analyzed
       val badWindows = plan.collect {
